@@ -344,13 +344,13 @@ def main() -> None:
     # per-query timings remain for diagnosis.
     total = round(sum(timings.values()), 3) if not failures else None
     load_after = round(os.getloadavg()[0], 2)
-    # stdout carries ONLY a compact headline object (VERDICT r9 #2):
-    # the driver's log capture keeps a bounded tail of output, and both
-    # r8 and r9 lost the per-query map to front-truncation when the
-    # full 70-entry map rode the final stdout line. The complete record
-    # (3-decimal per-query walls) lives exclusively in BENCH_FULL.json,
-    # written next to this script on every run; stdout stays a few
-    # hundred bytes so the driver's BENCH_r{N}.json always parses.
+    # stdout carries ONE compact JSON line (VERDICT r9 #2): a log
+    # capture that keeps a bounded tail of output lost the record to
+    # front-truncation in r8 and r9, when verbose output rode the final
+    # line. The line holds the headline fields plus the per-query min
+    # map ("queries" below, a few KB). The verbose record (both sweep
+    # samples, e2e splits) lives in BENCH_FULL.json, written next to
+    # this script on every run.
     out = {
         "sf": sf,
         "load_before": load_before,

@@ -13,10 +13,15 @@ These are the 100 TB levers (SURVEY.md §7.2 step 8):
   ``groupBy`` (one reducer owns the hot key) or streaming stages
   (no AQE). Two-phase salted aggregation and replicate-side salted
   joins are the hand levers for those.
+- **Staging** materializes an intermediate once per process, keyed by
+  its input content. ``stage_once`` (parquet) and ``shared_stage`` (any
+  writer) commit through ``_commit_stage``; ``stage_bucketed_tables``
+  is the catalog-registered variant.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -25,12 +30,13 @@ from pyspark.sql import functions as F
 _SALT = "__salt"
 
 _STAGE_DIRS: dict[str, str] = {}
+_STAGE_DIRS_LOCK = threading.Lock()
 
 
 def process_stage_dir(prefix: str) -> str:
     """One temp staging dir per (process, prefix), removed at process
-    exit. Callers overwrite in place on re-invocation, so a long driver
-    session (bench min-of-2) never accumulates staged copies.
+    exit or by ``reset_staging``. Content-keyed stages live at
+    ``process_stage_dir(prefix)/key``, one key per prefix at a time.
 
     Staging exists because Catalyst does not CSE a subtree referenced
     from multiple join branches: an expensive intermediate referenced
@@ -38,84 +44,45 @@ def process_stage_dir(prefix: str) -> str:
     once to parquet and re-scanning is the lineage-free alternative to
     persist() — no executor memory pinned, deterministic re-reads.
 
-    Per-process by construction (mkdtemp) — concurrent processes never
-    see each other's dirs, so no locking is needed here. Stages shared
-    ACROSS processes go through ``shared_stage`` below instead."""
-    if prefix not in _STAGE_DIRS:
-        import atexit
-        import shutil
-        import tempfile
+    Per-process by construction (mkdtemp), so no cross-process lock; the
+    thread lock makes concurrent first calls agree on one dir."""
+    with _STAGE_DIRS_LOCK:
+        if prefix not in _STAGE_DIRS:
+            import atexit
+            import shutil
+            import tempfile
 
-        d = tempfile.mkdtemp(prefix=f"fa_stage_{prefix}_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _STAGE_DIRS[prefix] = d
-    return _STAGE_DIRS[prefix]
+            d = tempfile.mkdtemp(prefix=f"fa_stage_{prefix}_")
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
+            _STAGE_DIRS[prefix] = d
+        return _STAGE_DIRS[prefix]
 
 
-def shared_stage(
-    prefix: str,
-    key: str,
-    write_fn,
-    markers: Sequence[str] = ("_SUCCESS",),
-) -> str:
-    """Cross-PROCESS content-keyed staging with an atomic
-    tmp-then-rename commit (VERDICT r9 #7). ``process_stage_dir`` above
-    is per-process by construction (mkdtemp) and needs no lock; this is
-    the protocol for stages that are deliberately SHARED across
-    concurrent processes (pytest + bench + driver_sim reusing one
-    expensive fixture). The old idiom — unsynchronized
-    ``if not exists(_SUCCESS): write(final)`` straight into the shared
-    path — let two processes overwrite each other's half-written stage,
-    and a third could scan the torn result.
+def _commit_stage(
+    final: str, write_fn: Callable[[str], None], markers: Sequence[str]
+) -> None:
+    """The one commit every content-keyed stage goes through:
 
-    Protocol:
-
-    1. ``final = $TMPDIR/fa_shared_{prefix}_{key}``. If every ``markers``
-       entry exists under it, reuse. A committed stage is IMMUTABLE:
-       ``key`` encodes source content (``staging_tag``), so changed
-       inputs land in a NEW final dir, never an in-place overwrite.
-    2. Otherwise ``write_fn(tmp)`` builds the stage in a PID+random
-       sibling dir other processes never look at; any marker the writer
-       didn't emit itself (non-Spark writers) is stamped after
-       ``write_fn`` returns.
-    3. ``os.rename(tmp, final)`` commits — atomic on POSIX, so a reader
-       observes either no ``final`` or a complete one. If the rename
-       loses (another process committed first → EEXIST/ENOTEMPTY), our
-       tmp is discarded and the winner — complete by the same protocol
-       — is used.
-
-    A ``final`` that exists WITHOUT its markers can only be debris from
-    the pre-protocol idiom (a rename is all-or-nothing); it is retired
-    before committing. Retirement + commit run under an OS-level
-    ``flock`` on ``final.flock``: the kernel releases the lock when its
-    holder dies (crash, OOM-kill), so there is NO staleness heuristic
-    and no steal path at all. The r10 mkdir-lease with a 60 s mtime
-    steal had an irreducible TOCTOU — a stealer that passed the
-    staleness check, was descheduled, and resumed after another
-    process had legitimately re-acquired would steal the FRESH lease
-    (rename/rmdir never re-check mtime), admitting two writers to the
-    critical section; and a stealer dying mid-steal leaked rename
-    debris. flock has neither failure mode. The lock is held only
-    around the two directory ops (microseconds — the expensive
-    ``write_fn`` happens before acquisition); the zero-byte ``.flock``
-    file is left in place by design (unlinking a lock file would
-    reintroduce the acquire-vs-unlink race)."""
-    import fcntl
+    1. If every ``markers`` entry exists under ``final``, reuse it (the
+       key encodes the source content, so a committed stage is final).
+    2. Otherwise ``write_fn(tmp)`` builds a PID+random sibling, and any
+       marker the writer did not emit is stamped.
+    3. ``os.rename(tmp, final)`` commits atomically: readers never see a
+       torn stage. A lost rename (a racing thread won) adopts the
+       winner if it is complete, and raises otherwise.
+    4. After a write, superseded keys under the prefix are retired;
+       in-flight siblings are dot-named and survive."""
     import os
     import shutil
-    import tempfile
-    import time
     import uuid
 
-    final = os.path.join(tempfile.gettempdir(), f"fa_shared_{prefix}_{key}")
-    lock = final + ".flock"
+    def _complete() -> bool:
+        return all(os.path.exists(os.path.join(final, m)) for m in markers)
 
-    def _complete(d: str) -> bool:
-        return all(os.path.exists(os.path.join(d, m)) for m in markers)
-
-    if _complete(final):
-        return final
-    tmp = f"{final}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    if _complete():
+        return
+    base, key = os.path.split(final)
+    tmp = os.path.join(base, f".{key}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}")
     try:
         write_fn(tmp)
         for m in markers:
@@ -123,239 +90,70 @@ def shared_stage(
             if not os.path.exists(mp):
                 os.makedirs(os.path.dirname(mp), exist_ok=True)
                 open(mp, "w").close()
-        if os.path.isdir(lock):  # a dir squatting on the lock-FILE path
-            shutil.rmtree(lock, ignore_errors=True)
-        legacy = final + ".lock"
-        with open(lock, "a+b") as lock_fd:
-            # blocks until the holder commits or DIES — the kernel
-            # releases a dead holder's flock (fd close included), so
-            # orphaned leases resolve themselves with no staleness
-            # guess and no steal path
-            fcntl.flock(lock_fd, fcntl.LOCK_EX)
-            # The mkdir lease is held ALONGSIDE the flock while
-            # mutating: flock is the real mutual exclusion, the mkdir
-            # dir is the crash-visible lease other writers can probe
-            # (stamp + mtime) when the flock tells them nothing — e.g.
-            # after mid-hold lock-file loss puts two writers on
-            # different lock inodes.
-            #
-            # Stale-holder handling (ADVICE r11, refined by two r11
-            # review passes): we stamp our pid into every lease we
-            # create. A stamped lease whose pid is DEAD is retired
-            # immediately — no stall after a writer is killed inside
-            # the critical section (normally any stamped lease observed
-            # from inside the flock section is debris, since a live
-            # holder would be holding the flock we now hold; the probe
-            # is the belt to that suspender). An UNSTAMPED lease is
-            # retired after a 5 s grace — every writer stamps within
-            # microseconds of mkdir, so past the grace it can only be
-            # crash debris from the mkdir→stamp window. The remaining
-            # state — stamped-but-ALIVE (pid reuse or a zombie spoofing
-            # liveness, or a real holder after lock-file loss) — falls
-            # through to the >60 s mtime rule, never an exemption:
-            # progress is guaranteed within a minute no matter how the
-            # probe lies (the first review's deadlock finding against
-            # an alive-waits-forever design), and if the zero-byte
-            # .flock file is ever unlinked mid-hold (tmp cleaner), a
-            # live holder's lease is WAITED on for its microsecond
-            # critical section instead of stolen instantly (the second
-            # review's corruption finding against an always-steal
-            # design).
-            #
-            # Steals are an atomic RENAME to a unique trash name, not an
-            # in-place rmtree: concurrent stealers race the rename and
-            # exactly one wins (the loser gets ENOENT and re-enters the
-            # loop), so writers never double-admit.
-            #
-            # Grace policy (VERDICT r11 #6 gate landed r12, retired to
-            # default-on r13 — the ``SPARK_GRAFT_LEASE_V2`` env
-            # conditional is gone): every writer in this codebase is
-            # flock-generation, i.e. stamps its pid within microseconds
-            # of mkdir, so an UNSTAMPED lease older than a 5 s grace can
-            # only be crash debris from the mkdir→stamp window and is
-            # stolen without the 60 s wait. That is ALL the short grace
-            # may assert. A live holder whose stamp write FAILS
-            # (ENOSPC/EDQUOT) would break that invariant, so such a
-            # holder retries the stamp and then keeps the lease mtime
-            # fresh from a heartbeat thread while it holds (r13
-            # ADVICE) — an unstamped lease with a moving mtime is a
-            # live holder, and the grace clock never reaches 5 s. The r11 ask wanted the mtime branch dropped
-            # outright; the r12 review proved that unsafe even in a
-            # pure-flock world: "a live holder would be holding the
-            # flock we now hold" is FALSE after mid-hold lock-file loss
-            # (the tmp-cleaner scenario this docstring already names —
-            # the next writer flocks a NEW inode), and an unconditional
-            # steal there admits two writers to rmtree/rename the same
-            # final dir. So stamped-ALIVE leases keep the full 60 s
-            # rule (pid reuse can also spoof liveness), and the mtime
-            # branch is load-bearing forever, not transitional.
-
-            # Opportunistic sweep (ADVICE r11): a stealer killed
-            # between its atomic rename and the rmtree leaves an
-            # abandoned `{legacy}.steal-*` trash dir — by construction
-            # unreferenced once renamed — and across crashes these
-            # accumulate in tmp forever. Sweep siblings on entry.
-            import glob as _glob
-
-            for _trash in _glob.glob(_glob.escape(legacy) + ".steal-*"):
-                shutil.rmtree(_trash, ignore_errors=True)
-
-            pid_stamp = os.path.join(legacy, "pid")
-
-            def _stamped_holder_dead() -> bool:
-                try:
-                    pid = int(open(pid_stamp).read().strip() or 0)
-                except (OSError, ValueError):
-                    return False  # unstamped/unreadable: mtime rule
-                if pid <= 0:
-                    return False
-                try:
-                    os.kill(pid, 0)
-                except ProcessLookupError:
-                    return True  # definitely gone: steal immediately
-                except OSError:
-                    pass  # exists under another uid etc.: mtime rule
-                return False
-
-            def _steal() -> None:
-                trash = f"{legacy}.steal-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-                try:
-                    os.rename(legacy, trash)  # atomic: one winner
-                except OSError:
-                    return  # released, or another stealer won — retry loop
-                shutil.rmtree(trash, ignore_errors=True)
-
-            stamped = False
-            while True:
-                try:
-                    os.mkdir(legacy)
-                    try:
-                        with open(pid_stamp, "w") as fh:
-                            fh.write(str(os.getpid()))
-                        stamped = True
-                    except OSError:
-                        # Retry once — a transient failure shouldn't
-                        # demote us to the unstamped regime.
-                        try:
-                            time.sleep(0.05)
-                            with open(pid_stamp, "w") as fh:
-                                fh.write(str(os.getpid()))
-                            stamped = True
-                        except OSError:
-                            pass
-                    break
-                except FileExistsError:
-                    if _stamped_holder_dead():
-                        _steal()
-                        continue
-                    grace = 5.0 if not os.path.exists(pid_stamp) else 60.0
-                    try:
-                        if time.time() - os.stat(legacy).st_mtime > grace:
-                            _steal()
-                            continue
-                    except OSError:
-                        continue  # released between the two calls
-                    time.sleep(0.02)
-            heartbeat = None
-            if not stamped:
-                # ENOSPC/EDQUOT left the lease UNSTAMPED, so to other
-                # writers it is indistinguishable from mkdir→stamp
-                # crash debris and stealable after the 5 s grace — even
-                # while we are alive inside a slow pre-protocol-debris
-                # rmtree (r13 ADVICE). Keep the lease mtime fresh from
-                # a daemon thread for as long as we hold it so the
-                # grace clock never fires against a live holder.
-                import threading
-
-                _stop = threading.Event()
-
-                def _keep_fresh():
-                    while not _stop.wait(1.0):
-                        try:
-                            os.utime(legacy)
-                        except OSError:
-                            return  # lease gone (released or stolen)
-
-                _t = threading.Thread(target=_keep_fresh, daemon=True)
-                _t.start()
-                heartbeat = (_stop, _t)
-            try:
-                if not _complete(final):
-                    if os.path.isdir(final):  # pre-protocol debris
-                        shutil.rmtree(final)
-                    os.rename(tmp, final)
-                # else: another writer committed while we built — adopt
-                # it; same key means same content by contract
-            finally:
-                if heartbeat is not None:
-                    heartbeat[0].set()
-                    heartbeat[1].join(timeout=2.0)
-                try:
-                    os.unlink(pid_stamp)
-                except OSError:
-                    pass
-                try:
-                    os.rmdir(legacy)
-                except OSError:
-                    pass
-                fcntl.flock(lock_fd, fcntl.LOCK_UN)
+        try:
+            os.rename(tmp, final)
+        except OSError:
+            if not _complete():
+                raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+    for e in os.scandir(base):
+        if e.name != key and not e.name.startswith("."):
+            shutil.rmtree(e.path, ignore_errors=True)
+
+
+def shared_stage(
+    prefix: str,
+    key: str,
+    write_fn: Callable[[str], None],
+    markers: Sequence[str] = ("_SUCCESS",),
+) -> str:
+    """Stage ``process_stage_dir(prefix)/key`` with a caller-supplied
+    ``write_fn(path)``: non-parquet formats, multi-dir layouts, files
+    written from executors. ``markers`` mark a complete stage. Despite
+    the name, stages are per-process (see ``_commit_stage``)."""
+    import os
+
+    final = os.path.join(process_stage_dir(prefix), key)
+    _commit_stage(final, write_fn, markers)
     return final
 
 
 def reset_staging() -> None:
-    """Drop every process-staged generation (dirs + the prefix
-    registry). Exists for harnesses that must re-execute staged
-    subtrees under a different session config: driver_sim's ANSI-on
-    pass calls this so content-keyed reuse cannot hide an ANSI-only
-    fault (overflow, strict cast) inside a subtree the first pass
-    already materialized."""
+    """Drop every staged generation, so the next staging call writes
+    again. driver_sim's ANSI-on pass calls this so content-keyed reuse
+    cannot hide an ANSI-only fault (overflow, strict cast) inside a
+    subtree the first pass already materialized."""
     import shutil
 
-    for d in _STAGE_DIRS.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _STAGE_DIRS.clear()
+    with _STAGE_DIRS_LOCK:
+        for d in _STAGE_DIRS.values():
+            shutil.rmtree(d, ignore_errors=True)
+        _STAGE_DIRS.clear()
 
 
 def stage_once(
     df: DataFrame,
     prefix: str,
-    reuse_key: str | None = None,
+    reuse_key: str,
     return_path: bool = False,
 ):
-    """Materialize ``df`` to a per-process staging dir (overwriting any
-    previous generation) and return a fresh scan of it. Use when a plan
+    """Materialize ``df`` as parquet at ``process_stage_dir(prefix)/
+    reuse_key`` and return a fresh scan of it. Use when a plan
     references the same expensive subtree from 2+ branches.
 
-    ``reuse_key`` (a content-tracking tag, e.g. ``staging_tag(sf_dir,
-    'documents')``) skips the write when the same (prefix, key) was
-    already staged this process — a repeated invocation on unchanged
-    inputs (bench min-of-2, a long driver session) re-scans instead of
-    re-computing. The key MUST roll over when inputs change; callers
-    pass a tag derived from the source tables' (mtime, size), never a
-    constant. Without a key, every invocation restages. When a NEW key
-    is staged, superseded generations under the same prefix are
-    retired (after the new write lands), so at most one generation per
-    prefix lives at a time — a probe session walking several scale
-    factors never accumulates staged copies. CONTRACT (as for every
-    replaced-in-place stage): consume the returned DataFrame before
-    invoking again with different inputs.
+    ``reuse_key`` (e.g. ``staging_tag(sf_dir, 'documents')``) MUST roll
+    over when inputs change: a repeated call with the same key re-scans
+    instead of re-computing, and a new key retires the old stage. So
+    consume the returned DataFrame before staging different inputs.
 
     ``return_path=True`` additionally returns the staged directory —
     for callers that measure the materialized size to pick a join
     strategy (the boilerplate broadcast guard)."""
     import os
-    import shutil
 
-    base = process_stage_dir(prefix)
-    key = reuse_key if reuse_key else "data"
-    path = os.path.join(base, key)
-    if not (reuse_key and os.path.exists(os.path.join(path, "_SUCCESS"))):
-        df.write.mode("overwrite").parquet(path)
-        for e in os.scandir(base):
-            if e.name != key:
-                shutil.rmtree(e.path, ignore_errors=True)
+    path = os.path.join(process_stage_dir(prefix), reuse_key)
+    _commit_stage(path, lambda p: df.write.parquet(p), ("_SUCCESS",))
     scan = df.sparkSession.read.parquet(path)
     return (scan, path) if return_path else scan
 
@@ -386,10 +184,9 @@ def stage_bucketed_tables(
 
     Returns the meta string ("" when no ``meta_fn``). Per-process by
     construction (process_stage_dir), so concurrent processes never
-    fight over one catalog+dir pair — the cross-process variant of
-    that race is exactly why ``shared_stage`` exists for path-scanned
-    stages; catalog tables can't share safely across per-process
-    metastores, so they don't."""
+    fight over one catalog+dir pair. Catalog tables are registered at
+    their final path, so they cannot take ``_commit_stage``'s
+    rename-into-place commit."""
     import os
     import shutil
 

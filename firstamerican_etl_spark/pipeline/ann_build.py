@@ -321,11 +321,11 @@ def append_ann_index(
     # distinct count AND index collisions in a single pass (r15,
     # VERDICT r14 #7: the r14 shape ran batch-dup and the collision
     # semi-join as two jobs on threads; the left join folds them into
-    # one scan of the batch). The left join cannot multiply rows: a
-    # COMMITTED index never carries duplicate vec_ids — the build
-    # assigns from a unique-keyed source and every append runs this
-    # very guard before writing. Explicit schemas on both index reads
-    # skip the footer-inference driver jobs (guide §2.6 job floors).
+    # one scan of the batch). Should the index ever carry a duplicate
+    # vec_id, the left join fans out and n != nd, so the collision
+    # check runs first and blames the index. Explicit schemas on both
+    # index reads skip the footer-inference driver jobs (guide §2.6
+    # job floors).
     # The remaining two preflight actions (fused guard, centroid
     # collect) share no ordering — concurrent driver threads; the
     # guard exceptions are re-raised in the original order below.
@@ -357,17 +357,17 @@ def append_ann_index(
             int(guard["n"]), int(guard["nd"]), int(guard["ndup"])
         )
         cent_rows = f_cent.result()
-    if n_rows != n_distinct:
-        raise ValueError(
-            f"append batch carries {n_rows - n_distinct} duplicated "
-            "vec_ids within itself; appending would double-serve them — "
-            "deduplicate the batch first"
-        )
     if n_dup:
         raise ValueError(
             f"{n_dup} vec_ids in the append batch already exist in the "
             f"index at {out_dir}; appending them would double-serve — "
             "deduplicate the batch or rebuild the index"
+        )
+    if n_rows != n_distinct:
+        raise ValueError(
+            f"append batch carries {n_rows - n_distinct} duplicated "
+            "vec_ids within itself; appending would double-serve them — "
+            "deduplicate the batch first"
         )
     centroids = [
         (int(r["cell_id"]), [float(x) for x in r["centroid"]]) for r in cent_rows

@@ -365,6 +365,50 @@ def minhash_lsh_pairs_from_bands(bands: DataFrame) -> DataFrame:
     return pairs
 
 
+def _simhash_vote_kernel():
+    """``dedup_simhash``'s mapInPandas kernel, built by a factory so the
+    closure ships to Python workers by value (no import of this module)."""
+    import numpy as np
+    import pandas as pd
+
+    def _vote(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            arrs = [np.asarray(x, dtype=np.int64) for x in pdf["hs"]]
+            lens = np.array([a.shape[0] for a in arrs], dtype=np.int64)
+            if not lens.all():
+                # reduceat would silently give the next doc's votes
+                raise ValueError(
+                    "simhash vote: empty token-hash array for doc_id "
+                    f"{pdf['doc_id'].values[lens == 0][0]}"
+                )
+            flat = np.concatenate(arrs)
+            # bit b of each little-endian int64 → column b of a
+            # (n_tokens, 64) 0/1 matrix; reduceat sums per-doc segments
+            bits = np.unpackbits(
+                flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
+            )
+            starts = np.zeros(len(arrs), dtype=np.int64)
+            if len(arrs) > 1:
+                starts[1:] = np.cumsum(lens)[:-1]
+            votes = np.add.reduceat(bits.astype(np.int64), starts, axis=0)
+            # majority rule identical to the aggregate form:
+            # bit set iff count_b * 2 > n_tok
+            simbits = votes * 2 > lens[:, None]
+            packed = np.packbits(simbits, axis=1, bitorder="little")
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].values,
+                    # uint64 → int64 view reproduces the signed two's-
+                    # complement long (bit 63 = sign) of the JVM form
+                    "simhash": packed.view(np.int64).ravel(),
+                }
+            )
+
+    return _vote
+
+
 @register(
     "dedup_simhash",
     oracle=None,  # bit-level simhash over xxhash64 → rows-only check
@@ -397,9 +441,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     null array emits nothing); the isNotNull filter keeps that
     semantics exactly.
     """
-    import numpy as np
-    import pandas as pd
-
     # cpu_spread (r15, guide §2.5): normalize+tokenize+hash AND the
     # numpy vote pass all run on the scan partitioning, and the
     # driver's single-row-group tables plan ONE scan task — measured
@@ -415,36 +456,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hs"),
     ).filter(F.col("hs").isNotNull())
 
-    def _vote(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [np.asarray(x, dtype=np.int64) for x in pdf["hs"]]
-            lens = np.array([a.shape[0] for a in arrs], dtype=np.int64)
-            flat = np.concatenate(arrs)
-            # bit b of each little-endian int64 → column b of a
-            # (n_tokens, 64) 0/1 matrix; reduceat sums per-doc segments
-            bits = np.unpackbits(
-                flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-            )
-            starts = np.zeros(len(arrs), dtype=np.int64)
-            if len(arrs) > 1:
-                starts[1:] = np.cumsum(lens)[:-1]
-            votes = np.add.reduceat(bits.astype(np.int64), starts, axis=0)
-            # majority rule identical to the aggregate form:
-            # bit set iff count_b * 2 > n_tok
-            simbits = votes * 2 > lens[:, None]
-            packed = np.packbits(simbits, axis=1, bitorder="little")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    # uint64 → int64 view reproduces the signed two's-
-                    # complement long (bit 63 = sign) of the JVM form
-                    "simhash": packed.view(np.int64).ravel(),
-                }
-            )
-
-    sim_df = hs.mapInPandas(_vote, schema="doc_id bigint, simhash bigint")
+    sim_df = hs.mapInPandas(_simhash_vote_kernel(), "doc_id bigint, simhash bigint")
     return sim_df.select(
         "doc_id",
         "simhash",

@@ -331,22 +331,14 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange format of the Hive/Trino estate a 100 TB lake
     typically borders, and Spark's reader push-down/pruning work the
     same way (columnar stripes + min/max indexes)."""
-    import os
-
-    from firstamerican_etl_spark.operators.scale import process_stage_dir
+    from firstamerican_etl_spark.operators.scale import shared_stage
     from firstamerican_etl_spark.sources.io import staging_tag
 
-    ev = load_table(spark, sf_dir, "events")
-    base = process_stage_dir("orc_events")
-    key = staging_tag(sf_dir, "events")
-    path = os.path.join(base, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ev.write.mode("overwrite").orc(path)
-        import shutil
-
-        for e in os.scandir(base):
-            if e.name != key:
-                shutil.rmtree(e.path, ignore_errors=True)
+    path = shared_stage(
+        "orc_events",
+        staging_tag(sf_dir, "events"),
+        lambda p: load_table(spark, sf_dir, "events").write.orc(p),
+    )
     o = spark.read.orc(path)
     return o.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -376,14 +368,11 @@ def _stage_fazip_fixture(spark: SparkSession, sf_dir: str) -> str:
     import os
     import zipfile
 
-    from firstamerican_etl_spark.operators.scale import process_stage_dir
+    from firstamerican_etl_spark.operators.scale import shared_stage
     from firstamerican_etl_spark.sources.io import staging_tag
 
-    base = process_stage_dir("fazip_fixture")
-    key = staging_tag(sf_dir, "documents")
-    path = os.path.join(base, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
+    def _write_zips(path: str) -> None:
+        os.makedirs(path)
         rows = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "lang", F.length("text").alias("n"))
@@ -416,8 +405,10 @@ def _stage_fazip_fixture(spark: SparkSession, sf_dir: str) -> str:
                 for m in range(3):
                     body = "\n".join([header] + members[z * 3 + m]) + "\n"
                     zf.writestr(f"Docs{z}_{m}.txt", body)
-        open(os.path.join(path, "_SUCCESS"), "w").close()
-    return path
+
+    return shared_stage(
+        "fazip_fixture", staging_tag(sf_dir, "documents"), _write_zips
+    )
 
 
 @register(
@@ -490,15 +481,13 @@ def jsonlgz_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses the same writer for its final export."""
     import os
 
-    from firstamerican_etl_spark.operators.scale import process_stage_dir
+    from firstamerican_etl_spark.operators.scale import shared_stage
     from firstamerican_etl_spark.sources.io import staging_tag
     from firstamerican_etl_spark.sources.jsonlgz import JsonlGzDataSource
 
     spark.dataSource.register(JsonlGzDataSource)
-    base = process_stage_dir("jsonlgz_roundtrip")
-    key = staging_tag(sf_dir, "documents")
-    path = os.path.join(base, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def _export(p: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id",
             "lang",
@@ -506,8 +495,12 @@ def jsonlgz_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("source") == F.lit("web")).alias("src_web"),
         )
         docs.repartition(4).write.format("jsonlgz").mode("overwrite").option(
-            "path", path
+            "path", p
         ).save()
+
+    path = shared_stage(
+        "jsonlgz_roundtrip", staging_tag(sf_dir, "documents"), _export
+    )
     # read through the _SUCCESS manifest, not a directory glob: the
     # writer's commit contract is that ONLY manifest-listed shards are
     # committed — a task that wrote its shard and then died retries

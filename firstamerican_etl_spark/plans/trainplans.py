@@ -511,7 +511,11 @@ def dsir_logweights(
     ``pipeline/corpus_build.py`` applies it mid-pipeline to annotate
     survivors. Returns (doc_id, lang, n_grams, logweight_scaled);
     docs with <2 words are absent (no bigram evidence). See the
-    registered query's docstring for exactness and scale analysis."""
+    registered query's docstring for exactness and scale analysis.
+    Without a ``reuse_key`` (a mid-pipeline frame has no content tag)
+    every call restages under a fresh key."""
+    import uuid
+
     from firstamerican_etl_spark.operators.scale import stage_once
     from firstamerican_etl_spark.plans.dedupplans import exploded_words
 
@@ -544,7 +548,7 @@ def dsir_logweights(
             F.any_value("lang").alias("lang"), F.count(F.lit(1)).alias("n")
         ),
         "dsir_doc_buckets",
-        reuse_key=reuse_key,
+        reuse_key=reuse_key or uuid.uuid4().hex,
     )
     raw = dc.groupBy("bucket").agg(F.sum("n").alias("cr"))
     tgt = (

@@ -59,11 +59,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-ready defaults.
+    """Build a SparkSession with scale-ready defaults.
 
     On a real cluster, pass ``master=None`` with spark-submit providing
     the master URL; locally this defaults to ``local[$SPARK_GRAFT_CPUS]``.
+    A live session is returned unchanged: ``getOrCreate`` would re-apply
+    these options (``shuffle.partitions`` too) over the host's settings.
     """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     cpus = DEFAULT_CPUS
     if master is None:
         if os.environ.get("SPARK_GRAFT_MASTER"):

@@ -171,6 +171,27 @@ def test_append_guards_fail_loudly(spark, sf_dir, tmp_path):
         append_ann_index(spark, d, dup_dir)
 
 
+def test_append_guard_blames_index_side_duplicate(spark, sf_dir, tmp_path):
+    """A vec_id duplicated in the INDEX fans the guard's left join out.
+    The collision check runs first, so the error names the index, not
+    the (duplicate-free) batch."""
+    import glob
+    import shutil
+
+    from firstamerican_etl_spark.pipeline.ann_build import append_ann_index
+
+    d = str(tmp_path / "idx_dup")
+    build_ann_index(
+        spark, sf_dir, d, n_cells=8, lloyd_rounds=1, where="vec_id % 2 = 0"
+    )
+    part = sorted(
+        glob.glob(os.path.join(d, "assignments.parquet", "cell_id=*", "part-*"))
+    )[0]
+    shutil.copy(part, os.path.join(os.path.dirname(part), "part-dup.parquet"))
+    with pytest.raises(ValueError, match="already exist in the index"):
+        append_ann_index(spark, d, sf_dir, where="vec_id % 2 = 0")
+
+
 def test_append_then_compact_preserves_serving(spark, sf_dir, tmp_path):
     """The maintenance composition a long-lived index actually runs:
     delta appends leave small files inside every cell partition;

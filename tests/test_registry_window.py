@@ -167,3 +167,35 @@ def test_no_contrast_row_in_headline_bench():
         n for n in bench.HEADLINE if n in reg and "contrast" in reg[n].tags
     ]
     assert offenders == [], f"contrast rows in bench HEADLINE: {offenders}"
+
+
+def test_unfingerprintable_function_counts_as_touched(tmp_path, monkeypatch):
+    """A registered function the module fingerprints cannot see (built
+    in a factory) must count as touched since its last green round:
+    comparing two missing fingerprints would prove it unchanged forever."""
+    import subprocess
+    from types import SimpleNamespace
+
+    from firstamerican_etl_spark.plans import registry
+    from tools.driver_sim import code_touched_since_green
+
+    root = str(tmp_path)
+    mod = tmp_path / "mod.py"
+    src = "def make():\n    def q(spark, sf_dir):\n        return {}\n    return q\n"
+
+    def commit(body: str, rnd: int) -> None:
+        mod.write_text(src.format(body))
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text("{}")
+        git = ["git", "-C", root, "-c", "user.name=t", "-c", "user.email=t@t"]
+        subprocess.run(git + ["add", "-A"], check=True)
+        subprocess.run(git + ["commit", "-qm", f"r{rnd}"], check=True)
+
+    subprocess.run(["git", "init", "-q", root], check=True)
+    commit("1", 1)
+    commit("2", 2)  # the factory-built query changed after its green row
+    scope: dict = {}
+    exec(compile(src.format("2"), str(mod), "exec"), scope)
+    monkeypatch.setattr(
+        registry, "load_all", lambda: {"q": SimpleNamespace(spark=scope["make"]())}
+    )
+    assert code_touched_since_green(root, {"q": 1}) == {"q"}

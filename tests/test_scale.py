@@ -527,8 +527,7 @@ def test_values_at_global_ranks_empty(spark):
 
 def test_stage_once_reuse_semantics(spark):
     """stage_once: a reuse_key skips the rewrite for the same
-    (prefix, key) within a process, a different key restages, and no
-    key always restages (overwrite-in-place)."""
+    (prefix, key) within a process, and a different key restages."""
     import os
     import time
 
@@ -553,9 +552,20 @@ def test_stage_once_reuse_semantics(spark):
     out3 = scale.stage_once(spark.range(5), "t_reuse", reuse_key="k2")
     assert out3.count() == 5
     assert sorted(os.listdir(scale._STAGE_DIRS["t_reuse"])) == ["k2"]
-    # no key: every call rewrites
-    scale.stage_once(df, "t_nokey")
-    m_nokey = mtime("t_nokey", "data")
-    time.sleep(0.05)
-    scale.stage_once(df, "t_nokey")
-    assert mtime("t_nokey", "data") > m_nokey
+
+
+def test_simhash_vote_rejects_empty_hash_array():
+    """np.add.reduceat reads an empty segment as the next doc's first
+    row, so an empty per-doc hash array would silently move votes onto
+    the wrong document: the kernel must fail loudly instead."""
+    import pandas as pd
+
+    from firstamerican_etl_spark.plans.dedupplans import _simhash_vote_kernel
+
+    vote = _simhash_vote_kernel()
+    # one token: every bit votes 1 of 1, so the fingerprint is the hash
+    (out,) = vote([pd.DataFrame({"doc_id": [1], "hs": [[7]]})])
+    assert out["simhash"].tolist() == [7]
+    batch = pd.DataFrame({"doc_id": [1, 2, 3], "hs": [[5, 6], [], [7]]})
+    with pytest.raises(ValueError, match="doc_id 2"):
+        list(vote([batch]))

@@ -1,506 +1,145 @@
-"""Cross-process staging protocol (operators/scale.shared_stage,
-VERDICT r9 #7): two concurrent PROCESSES staging the same content key
-must never expose a half-written stage — the pre-r10 idiom
-(unsynchronized ``if not exists(_SUCCESS): write(final)`` straight into
-the shared path) let a second process overwrite a first one's
-in-flight write and a third scan the torn result. The protocol under
-test: build in a PID+random sibling tmp dir, stamp markers, atomic
-``os.rename`` commit, loser discards its tmp and adopts the winner.
+"""Per-process staging protocol (operators/scale._commit_stage through
+``shared_stage``): a content-keyed stage is built in a private sibling
+dir and committed by one atomic ``os.rename`` into
+``process_stage_dir(prefix)/key``, so neither a failed writer nor a
+racing thread can expose a torn stage. Staging a new key retires the
+superseded one, and ``reset_staging`` forces the next call to write.
 
-These tests drive the helper with plain-python writers — the protocol
-is filesystem-level and Spark-agnostic, and subprocesses must not pay
-a JVM launch. The Spark call sites (events_from_jsonl/xml/orc,
-scan_merge_schema, PPM/wds fixtures, streaming landing) are covered by
-their own oracle rows.
+These tests drive the helper with plain-python writers: the protocol
+is filesystem-level and Spark-agnostic. The Spark call sites
+(events_from_jsonl/xml/orc, scan_merge_schema, the ORC/fazip/jsonl.gz
+round-trips, PPM/wds fixtures, streaming landing) are covered by their
+own oracle rows.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import subprocess
-import sys
-import tempfile
-import time
-import uuid
+import threading
 
-from firstamerican_etl_spark.operators.scale import shared_stage
+import pytest
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _final(prefix: str, key: str) -> str:
-    return os.path.join(tempfile.gettempdir(), f"fa_shared_{prefix}_{key}")
+from firstamerican_etl_spark.operators import scale
+from firstamerican_etl_spark.operators.scale import (
+    process_stage_dir,
+    reset_staging,
+    shared_stage,
+)
 
 
-def test_shared_stage_writes_then_reuses():
-    key = uuid.uuid4().hex[:12]
-    calls = []
+@pytest.fixture(autouse=True)
+def _own_stage_dirs(monkeypatch):
+    """Give each test an empty prefix registry, so resets and retires
+    here never touch the stages other test modules hold, and remove
+    everything the test staged."""
+    monkeypatch.setattr(scale, "_STAGE_DIRS", {})
+    yield
+    reset_staging()
 
+
+def _writer(calls: list, text: str = "v1"):
     def write(p):
         calls.append(p)
         os.makedirs(p)
-        open(os.path.join(p, "data.txt"), "w").write("v1")
+        with open(os.path.join(p, "data.txt"), "w") as fh:
+            fh.write(text)
 
-    d1 = shared_stage("sstest", key, write)
-    assert d1 == _final("sstest", key)
+    return write
+
+
+def test_shared_stage_writes_then_reuses():
+    calls: list = []
+    d1 = shared_stage("sstest", "k1", _writer(calls))
+    assert d1 == os.path.join(process_stage_dir("sstest"), "k1")
     assert open(os.path.join(d1, "data.txt")).read() == "v1"
     assert os.path.exists(os.path.join(d1, "_SUCCESS"))  # stamped for us
-    d2 = shared_stage("sstest", key, write)
+    d2 = shared_stage("sstest", "k1", _writer(calls, "v2"))
     assert d2 == d1 and len(calls) == 1  # second call reused, no rewrite
     # the tmp build dir never leaks
-    assert glob.glob(d1 + ".tmp-*") == []
+    assert os.listdir(process_stage_dir("sstest")) == ["k1"]
 
 
 def test_shared_stage_failed_writer_leaves_nothing():
-    key = uuid.uuid4().hex[:12]
-
     def boom(p):
         os.makedirs(p)
         open(os.path.join(p, "partial.txt"), "w").write("torn")
         raise RuntimeError("writer died")
 
-    try:
-        shared_stage("sstest", key, boom)
-        raise AssertionError("expected writer failure to propagate")
-    except RuntimeError:
-        pass
-    final = _final("sstest", key)
-    assert not os.path.exists(final)  # no torn commit
-    assert glob.glob(final + ".tmp-*") == []  # tmp cleaned up
+    with pytest.raises(RuntimeError, match="writer died"):
+        shared_stage("sstest", "k1", boom)
+    # no torn commit, and the tmp dir is cleaned up
+    assert os.listdir(process_stage_dir("sstest")) == []
 
 
-def test_shared_stage_heals_legacy_half_written_final():
-    """A final dir WITHOUT its markers can only be debris from the
-    pre-protocol idiom (the rename commit is all-or-nothing); it must
-    be retired and replaced, not trusted and not fatal."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest", key)
-    os.makedirs(final)
-    open(os.path.join(final, "stale.txt"), "w").write("pre-protocol debris")
+def test_two_threads_one_key_commit_single_generation():
+    """Two threads stage one key with both writes in flight. Exactly
+    one generation commits: the stage is internally consistent (every
+    file from ONE writer), both threads get the same path, and the
+    loser's tmp dir is gone."""
+    both_writing = threading.Barrier(2)
 
     def write(p):
         os.makedirs(p)
-        open(os.path.join(p, "data.txt"), "w").write("fresh")
+        both_writing.wait(timeout=10)
+        me = threading.current_thread().name
+        for i in range(20):
+            with open(os.path.join(p, f"part-{i:02d}.txt"), "w") as fh:
+                fh.write(me)
 
-    d = shared_stage("sstest", key, write)
-    assert d == final
-    assert open(os.path.join(d, "data.txt")).read() == "fresh"
-    assert not os.path.exists(os.path.join(d, "stale.txt"))
+    out: dict[str, str] = {}
 
+    def run():
+        out[threading.current_thread().name] = shared_stage("sstest", "k1", write)
 
-_RACER = r"""
-import os, sys, time
-sys.path.insert(0, {repo!r})
-from firstamerican_etl_spark.operators.scale import shared_stage
-
-def write(p):
-    os.makedirs(p)
-    pid = os.getpid()
-    # a deliberately SLOW multi-file write so the two processes overlap
-    for i in range(20):
-        with open(os.path.join(p, f"part-{{i:02d}}.txt"), "w") as f:
-            f.write(f"{{pid}}")
-        time.sleep(0.02)
-    with open(os.path.join(p, "writer_pid.txt"), "w") as f:
-        f.write(str(pid))
-
-d = shared_stage("sstest_race", {key!r}, write)
-print(d)
-"""
-
-
-def test_two_process_race_single_consistent_winner():
-    """THE race the verdict called out: two concurrent processes stage
-    the same key while both writes are in flight. Exactly one
-    generation may win; the committed stage must be internally
-    consistent (every file from ONE writer), both processes must agree
-    on the path, and no tmp debris may survive."""
-    key = uuid.uuid4().hex[:12]
-    script = _RACER.format(repo=_REPO, key=key)
-    procs = [
-        subprocess.Popen(
-            [sys.executable, "-c", script],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-        )
-        for _ in range(2)
-    ]
-    outs = []
-    for p in procs:
-        out, err = p.communicate(timeout=120)
-        assert p.returncode == 0, err
-        outs.append(out.strip())
-
-    final = _final("sstest_race", key)
-    assert outs == [final, final]  # both adopted the same committed dir
-    assert os.path.exists(os.path.join(final, "_SUCCESS"))
-    winner = open(os.path.join(final, "writer_pid.txt")).read()
-    # internal consistency: every part file is the winner's — a torn
-    # merge of two writers' files is exactly the pre-protocol failure
-    parts = sorted(glob.glob(os.path.join(final, "part-*.txt")))
+    threads = [threading.Thread(target=run, name=f"w{i}") for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert set(out) == {"w0", "w1"}
+    final = os.path.join(process_stage_dir("sstest"), "k1")
+    assert set(out.values()) == {final}
+    parts = [f for f in os.listdir(final) if f.startswith("part-")]
     assert len(parts) == 20
-    assert {open(f).read() for f in parts} == {winner}
-    assert glob.glob(final + ".tmp-*") == []
+    writers = {open(os.path.join(final, f)).read() for f in parts}
+    assert len(writers) == 1  # one writer's generation, never a mix
+    assert os.listdir(process_stage_dir("sstest")) == ["k1"]
 
 
-def test_two_process_race_over_legacy_debris():
-    """The retirement race from the r10 review: pre-protocol debris at
-    final, two writers racing. Without the mkdir lease, one writer's
-    check-then-rmtree could delete the other's JUST-committed complete
-    stage. With it, retirement + commit are serialized: the survivor
-    must be one writer's complete generation and no lease or tmp may
-    leak."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)
+def test_lost_rename_onto_incomplete_stage_raises():
+    """A committed stage is complete by construction, so a final dir
+    without its markers is not a winner to adopt: the commit raises
+    instead of trusting it, and the writer's tmp dir is removed."""
+    final = os.path.join(process_stage_dir("sstest"), "k1")
     os.makedirs(final)
-    open(os.path.join(final, "stale.txt"), "w").write("debris")
+    open(os.path.join(final, "stale.txt"), "w").write("not a stage")
 
-    script = _RACER.format(repo=_REPO, key=key)
-    procs = [
-        subprocess.Popen(
-            [sys.executable, "-c", script],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-        )
-        for _ in range(2)
-    ]
-    outs = []
-    for p in procs:
-        out, err = p.communicate(timeout=120)
-        assert p.returncode == 0, err
-        outs.append(out.strip())
-    assert outs == [final, final]
-    assert os.path.exists(os.path.join(final, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(final, "stale.txt"))
-    winner = open(os.path.join(final, "writer_pid.txt")).read()
-    parts = sorted(glob.glob(os.path.join(final, "part-*.txt")))
-    assert len(parts) == 20
-    assert {open(f).read() for f in parts} == {winner}
-    assert glob.glob(final + ".tmp-*") == []
-    assert not os.path.exists(final + ".lock")
+    with pytest.raises(OSError):
+        shared_stage("sstest", "k1", _writer([]))
+    assert os.listdir(process_stage_dir("sstest")) == ["k1"]
+    assert os.listdir(final) == ["stale.txt"]
 
 
-def test_orphaned_lease_race_single_winner():
-    """The r10 sixth/seventh-review race family: an ORPHANED lease
-    (holder died) must not block or corrupt later writers. Under the
-    flock protocol a dead holder's lock is released by the KERNEL, so
-    there is no staleness heuristic and no steal path (the mtime-steal
-    variants all had a TOCTOU admitting two writers). Pre-create a
-    legacy mkdir-lease DIRECTORY (pre-flock debris — the worst case:
-    it shadows the lock-file path), race four processes, and require a
-    single internally consistent committed generation, the legacy dir
-    retired, and no tmp debris."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)
-    legacy = final + ".lock"
-    os.makedirs(legacy)
-    stale = time.time() - 120
-    os.utime(legacy, (stale, stale))
-
-    script = _RACER.format(repo=_REPO, key=key)
-    procs = [
-        subprocess.Popen(
-            [sys.executable, "-c", script],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-        )
-        for _ in range(4)
-    ]
-    outs = []
-    for p in procs:
-        out, err = p.communicate(timeout=120)
-        assert p.returncode == 0, err
-        outs.append(out.strip())
-    assert outs == [final] * 4
-    assert os.path.exists(os.path.join(final, "_SUCCESS"))
-    winner = open(os.path.join(final, "writer_pid.txt")).read()
-    parts = sorted(glob.glob(os.path.join(final, "part-*.txt")))
-    assert len(parts) == 20
-    assert {open(f).read() for f in parts} == {winner}
-    assert glob.glob(final + ".tmp-*") == []
-    assert not os.path.isdir(legacy)  # pre-flock debris retired
-    assert os.path.isfile(final + ".flock")  # the permanent lock file
+def test_superseded_key_is_retired():
+    calls: list = []
+    old = shared_stage("sstest", "k1", _writer(calls))
+    new = shared_stage("sstest", "k2", _writer(calls, "v2"))
+    assert len(calls) == 2
+    assert not os.path.exists(old)
+    assert os.listdir(process_stage_dir("sstest")) == ["k2"]
+    assert open(os.path.join(new, "data.txt")).read() == "v2"
 
 
-def test_flock_blocks_until_holder_death_releases():
-    """The property the mtime heuristic could only approximate: a
-    LIVE holder blocks writers indefinitely; a DEAD holder blocks
-    nobody. Hold the flock in a child process, SIGKILL it mid-hold,
-    and require a waiting shared_stage to proceed the moment the
-    kernel releases the dead holder's lock. Children are killed on
-    EVERY exit path — a failed assertion must not leak a 600 s holder
-    that blocks the next run's lock."""
-    import signal
-
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)  # the prefix _RACER stages under
-    lock = final + ".flock"
-
-    holder_src = (
-        "import fcntl, sys, time\n"
-        f"fd = open({lock!r}, 'a+b')\n"
-        "fcntl.flock(fd, fcntl.LOCK_EX)\n"
-        "print('held', flush=True)\n"
-        "time.sleep(600)\n"
-    )
-    holder = subprocess.Popen(
-        [sys.executable, "-c", holder_src], stdout=subprocess.PIPE, text=True
-    )
-    waiter = None
-    try:
-        assert holder.stdout.readline().strip() == "held"
-
-        waiter_src = _RACER.format(repo=_REPO, key=key)
-        waiter = subprocess.Popen(
-            [sys.executable, "-c", waiter_src],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-        )
-        # the waiter builds its tmp (~0.5s) then blocks on the held
-        # flock; kill the holder and the kernel releases the lock
-        time.sleep(3)
-        assert waiter.poll() is None  # still blocked behind the holder
-        holder.send_signal(signal.SIGKILL)
-        out, err = waiter.communicate(timeout=60)
-        assert waiter.returncode == 0, err
-        assert out.strip() == final
-        assert os.path.exists(os.path.join(final, "_SUCCESS"))
-    finally:
-        for p in (holder, waiter):
-            if p is not None and p.poll() is None:
-                p.kill()
-                p.wait(timeout=10)
-
-
-def test_dead_stamped_lease_steals_immediately():
-    """ADVICE r11: a NEW-version writer killed inside the critical
-    section leaves a fresh-mtime legacy dir; its flock is already
-    kernel-released, so only the mkdir lease lingers. The stamp marks
-    it as flock-protocol debris (a live stamped holder would be
-    holding the flock the observer holds), so the next writer retires
-    it at once — no 60 s mtime stall (the stall is the behavior under
-    test: communicate(timeout=30) would expire if the writer sat out
-    the old mtime window)."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)
-    legacy = final + ".lock"
-    os.makedirs(legacy)  # fresh mtime — the old rule would wait 60s
-    # a pid that has definitely exited
-    dead = subprocess.Popen([sys.executable, "-c", "pass"])
-    dead.wait(timeout=30)
-    open(os.path.join(legacy, "pid"), "w").write(str(dead.pid))
-
-    waiter = subprocess.Popen(
-        [sys.executable, "-c", _RACER.format(repo=_REPO, key=key)],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        out, err = waiter.communicate(timeout=30)
-        assert waiter.returncode == 0, err
-        assert out.strip() == final
-        assert os.path.exists(os.path.join(final, "_SUCCESS"))
-        assert not os.path.isdir(legacy)
-    finally:
-        if waiter.poll() is None:
-            waiter.kill()
-            waiter.wait(timeout=10)
-
-
-def test_stamped_lease_with_live_pid_cannot_deadlock():
-    """r11 review: liveness alone must never be trusted to BLOCK
-    forever — a dead holder's pid can be RECYCLED by an unrelated
-    long-lived process (or linger as a zombie), spoofing 'alive'
-    indefinitely. The protocol therefore applies the >60 s mtime
-    fallback to every non-dead state rather than exempting
-    stamped-alive leases. Fabricate the worst case — a stamped lease
-    whose pid IS a live process (ours), aged past the mtime window —
-    and require the writer to steal it and finish promptly rather
-    than hang."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)
-    legacy = final + ".lock"
-    os.makedirs(legacy)
-    open(os.path.join(legacy, "pid"), "w").write(str(os.getpid()))  # "alive"
-    stale = time.time() - 120
-    os.utime(legacy, (stale, stale))  # aged past the 60s window
-
-    waiter = subprocess.Popen(
-        [sys.executable, "-c", _RACER.format(repo=_REPO, key=key)],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        out, err = waiter.communicate(timeout=30)
-        assert waiter.returncode == 0, err
-        assert out.strip() == final
-        assert os.path.exists(os.path.join(final, "_SUCCESS"))
-        assert not os.path.isdir(legacy)
-    finally:
-        if waiter.poll() is None:
-            waiter.kill()
-            waiter.wait(timeout=10)
-
-
-def test_fresh_stamped_live_lease_blocks_until_release():
-    """The flip side (second r11 review pass): if the zero-byte .flock
-    file is ever unlinked mid-hold (tmp cleaner), a second writer can
-    acquire a FRESH flock inode and observe a live holder's stamped
-    lease — an always-steal design would destroy a stage mid-commit.
-    A fresh-mtime stamped lease whose pid is alive must therefore be
-    WAITED on, and stolen only via the >60 s mtime rule."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)
-    legacy = final + ".lock"
-    os.makedirs(legacy)  # fresh mtime
-    open(os.path.join(legacy, "pid"), "w").write(str(os.getpid()))  # alive
-
-    waiter = subprocess.Popen(
-        [sys.executable, "-c", _RACER.format(repo=_REPO, key=key)],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        time.sleep(5)  # waiter built its tmp and is parked on the lease
-        assert waiter.poll() is None, "writer stole a fresh live stamped lease"
-        os.unlink(os.path.join(legacy, "pid"))
-        os.rmdir(legacy)  # the holder releases
-        out, err = waiter.communicate(timeout=60)
-        assert waiter.returncode == 0, err
-        assert out.strip() == final
-        assert os.path.exists(os.path.join(final, "_SUCCESS"))
-    finally:
-        if waiter.poll() is None:
-            waiter.kill()
-            waiter.wait(timeout=10)
-
-
-def test_unstamped_lease_blocks_within_grace_then_releases():
-    """An unstamped lease younger than the 5 s grace is
-    indistinguishable from a writer inside its mkdir→stamp window, so
-    a second writer must BLOCK on it (not destroy it) until the holder
-    releases. (Until r13 this scenario also covered old-protocol
-    mixed-version holders; that transitional role is retired — every
-    writer is flock-generation now.)"""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)
-    legacy = final + ".lock"
-    os.makedirs(legacy)  # fresh mtime, no stamp yet
-
-    waiter = subprocess.Popen(
-        [sys.executable, "-c", _RACER.format(repo=_REPO, key=key)],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        time.sleep(3)  # waiter built its tmp and is parked on the lease
-        assert waiter.poll() is None
-        os.rmdir(legacy)  # the holder releases inside the grace
-        out, err = waiter.communicate(timeout=60)
-        assert waiter.returncode == 0, err
-        assert out.strip() == final
-        assert os.path.exists(os.path.join(final, "_SUCCESS"))
-        assert not os.path.isdir(legacy)  # writer released its own hold
-    finally:
-        if waiter.poll() is None:
-            waiter.kill()
-            waiter.wait(timeout=10)
-
-
-def test_unstamped_debris_stolen_after_short_grace():
-    """VERDICT r11 #6, default behavior since r13 (the
-    SPARK_GRAFT_LEASE_V2 env gate is retired): every writer stamps its
-    pid within microseconds of mkdir, so an UNSTAMPED lease past a 5 s
-    grace is crash debris from the mkdir→stamp window and is stolen
-    without the 60 s mtime wait. Fabricate exactly that — a fresh
-    unstamped lease — and require progress well under the old
-    window."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)
-    legacy = final + ".lock"
-    os.makedirs(legacy)  # fresh mtime, NO pid stamp
-
-    waiter = subprocess.Popen(
-        [sys.executable, "-c", _RACER.format(repo=_REPO, key=key)],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        # far under the 60 s stamped-alive window: only the unstamped
-        # grace can pass this
-        out, err = waiter.communicate(timeout=30)
-        assert waiter.returncode == 0, err
-        assert out.strip() == final
-        assert os.path.exists(os.path.join(final, "_SUCCESS"))
-        assert not os.path.isdir(legacy)
-    finally:
-        if waiter.poll() is None:
-            waiter.kill()
-            waiter.wait(timeout=10)
-
-
-def test_stamped_live_lease_waits_past_unstamped_grace():
-    """The r12 review's corruption scenario: after mid-hold lock-file
-    loss a LIVE holder's stamped lease is visible to a writer holding
-    a flock on a NEW lock inode — the writer must WAIT on it (60 s
-    rule), not steal it after the short unstamped grace, or two
-    writers rmtree/rename the same final dir. A stamped-alive fresh
-    lease must therefore still block well past 5 s."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_race", key)
-    legacy = final + ".lock"
-    os.makedirs(legacy)  # fresh mtime
-    open(os.path.join(legacy, "pid"), "w").write(str(os.getpid()))  # alive
-
-    waiter = subprocess.Popen(
-        [sys.executable, "-c", _RACER.format(repo=_REPO, key=key)],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        time.sleep(8)  # past the unstamped grace, inside the 60 s rule
-        assert waiter.poll() is None, waiter.communicate()[1]
-        shutil.rmtree(legacy)  # the live holder releases
-        out, err = waiter.communicate(timeout=60)
-        assert waiter.returncode == 0, err
-        assert out.strip() == final
-        assert os.path.exists(os.path.join(final, "_SUCCESS"))
-    finally:
-        if waiter.poll() is None:
-            waiter.kill()
-            waiter.wait(timeout=10)
-
-
-def test_abandoned_steal_trash_swept_on_entry():
-    """ADVICE r11: a stealer killed between its atomic rename and the
-    rmtree leaves `{legacy}.steal-*` debris that nothing referenced
-    again — across crashes it accumulated in tmp forever. The lease
-    loop now sweeps sibling trash dirs on entry."""
-    key = uuid.uuid4().hex[:12]
-    final = _final("sstest_sweep", key)
-    legacy = final + ".lock"
-    trash = [f"{legacy}.steal-9999-{uuid.uuid4().hex[:8]}" for _ in range(3)]
-    for t in trash:
-        os.makedirs(os.path.join(t, "junk"))
-
-    def write(p):
-        os.makedirs(p)
-        with open(os.path.join(p, "x.txt"), "w") as f:
-            f.write("x")
-
-    d = shared_stage("sstest_sweep", key, write)
-    assert os.path.exists(os.path.join(d, "_SUCCESS"))
-    for t in trash:
-        assert not os.path.isdir(t), f"abandoned steal trash not swept: {t}"
+def test_reset_staging_forces_a_rewrite():
+    """driver_sim's ANSI-on pass resets staging so its staged subtrees
+    execute again under the new session config: after the reset, the
+    same (prefix, key) must run ``write_fn`` again."""
+    calls: list = []
+    first = shared_stage("sstest", "k1", _writer(calls))
+    shared_stage("sstest", "k1", _writer(calls))
+    assert len(calls) == 1
+    reset_staging()
+    assert not os.path.exists(first)
+    again = shared_stage("sstest", "k1", _writer(calls, "v2"))
+    assert len(calls) == 2
+    assert open(os.path.join(again, "data.txt")).read() == "v2"

@@ -372,7 +372,9 @@ def code_touched_since_green(
     "Changed" = the registered function's same-module AST-closure
     fingerprint (_module_fingerprints) differs between the two
     commits; a file that didn't exist at the base, or a function
-    absent from it, counts as touched (rename/move ⇒ re-prove).
+    absent from it, counts as touched (rename/move ⇒ re-prove), and so
+    does one the boundary fingerprints cannot see (nested or factory-
+    built: two missing entries would otherwise prove it unchanged).
 
     Determinism within a round: both endpoints are COMMITTED history
     (the per-round artifact commits), never the working tree or HEAD —
@@ -426,7 +428,11 @@ def code_touched_since_green(
         fp_base, fp_now = fp_cache[(base, rel)], fp_cache[(boundary, rel)]
         if fp_now is None:
             continue  # file unreadable at the boundary: no claim either way
-        if fp_base is None or fp_base.get(fn_name) != fp_now.get(fn_name):
+        if (
+            fp_base is None
+            or fn_name not in fp_now
+            or fp_base.get(fn_name) != fp_now[fn_name]
+        ):
             touched.add(n)
     return touched
 
