@@ -63,9 +63,9 @@ def register(
 # the window's size, existence, and ordering.
 DRIVER_WINDOW: tuple[str, ...] = (
     # ------------------------------------------------------------------
-    # r15 WINDOW — fourth round of the STANDING RE-PROVE ROTATION,
-    # first round of the CODE-TOUCHED-FIRST extension (VERDICT r14 #1):
-    # exactly 5 pinned veterans + 45 rotation slots.
+    # r16 WINDOW — fifth round of the STANDING RE-PROVE ROTATION,
+    # computed from the artifacts tracked through r15 (CORRECTNESS_r15,
+    # commit 73ba284): exactly 5 pinned veterans + 45 rotation slots.
     #
     # Rotation policy (VERDICT r11 #4, extended r15):
     #
@@ -74,22 +74,32 @@ DRIVER_WINDOW: tuple[str, ...] = (
     #                aggregation flagship, and the corpus e2e — proven
     #                fresh EVERY round so the core contract can never
     #                silently drift.
-    #   slots  6-50  (a) eligible NEVER-PROVEN queries first (none this
-    #                round), then (b) CODE-TOUCHED since last green:
-    #                any query whose registered function's same-module
-    #                AST-closure fingerprint changed between its last
-    #                green round's artifact commit and the latest round
-    #                boundary (driver_sim.code_touched_since_green) —
-    #                a rewritten query re-proves NEXT round instead of
-    #                waiting ~6 rounds for its staleness slot (this
-    #                round: the 14 r14-rewritten paths — repetition,
-    #                cdc, both triangles + 50k, kcore/lpa/khop,
-    #                knn_ivf, bootstrap, stats_moments, containment,
-    #                heavy_hitters, retrieval_ndcg); then (c) the
+    #   slots  6-50  (a) eligible NEVER-PROVEN queries first, then
+    #                (b) CODE-TOUCHED since last green: any query whose
+    #                registered function's same-module AST-closure
+    #                fingerprint changed between its last green round's
+    #                artifact commit and the latest round boundary
+    #                (driver_sim.code_touched_since_green) — a
+    #                rewritten query re-proves NEXT round instead of
+    #                waiting for its staleness slot; then (c) the
     #                stalest PROVEN eligible queries by MOST RECENT
     #                green driver row across the GIT-TRACKED
-    #                CORRECTNESS_r*.json, ties alphabetical — this
-    #                round the r9-r10 vintage fills the remainder.
+    #                CORRECTNESS_r*.json, ties alphabetical.
+    #
+    # This round (a) and (b) are both empty, so all 45 rotation slots
+    # are the staleness fill: the 30 eligible queries last green in
+    # r10, then the first 15 (alphabetical) last green in r11.
+    #
+    # The r15 SimHash/MinHash numpy rewrites are NOT in this window,
+    # and cannot be: the queries they changed (dedup_simhash,
+    # dedup_simhash_pairs, dedup_minhash_lsh and the minhash_bands
+    # helper behind it) are rows-only, and the window takes only
+    # full-value-oracle queries (test_window_entries_have_oracles).
+    # Their value-oracled twins (dedup_simhash_oracled,
+    # dedup_minhash_lsh_oracled) are separate md5-hash plans the
+    # rewrite did not touch, so the empty code-touched set is correct.
+    # The numpy paths' evidence is the local bit-identity pins in
+    # tests/test_scale.py and tests/test_multimodal.py.
     #
     # Regenerate per round: `python tools/driver_sim.py --rotation`
     # prints the COMPLETE 50-line tuple body (veterans included) —
@@ -105,57 +115,54 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "fa_flagship_merged",
     "q1_pricing_summary",
     "corpus_clean_pipeline",
-    # — rotation (45): code-touched first, then oldest MOST RECENT green —
-    # code-touched since last green (r10):
-    "graph_triangle_count",
-    "graph_triangle_degree_50k",
-    # code-touched since last green (r11):
-    "repetition_dup_ngram_coverage",
-    "retrieval_eval_ndcg",
-    "stats_moments_stable",
-    # code-touched since last green (r13):
-    "bootstrap_mean_ci_poisson",
-    "cdc_chunk_dedup",
-    "doc_containment_pairs",
-    "graph_triangle_count_degree",
-    "heavy_hitters_cms",
-    "kcore_peel_unrolled",
-    "khop_neighbor_agg",
-    "knn_ivf_recall_eval",
-    "lpa_communities_unrolled",
-    # last green r9:
-    "q18_large_orders",
-    "q19_disjunctive_predicates",
-    "q20_promotion_suppliers",
-    "q22_dormant_customers",
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q6_revenue_forecast",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q9_product_profit",
-    "quality_gopher_rules",
-    "salted_skew_join",
-    "semdedup_threshold_sweep",
-    "streaming_custom_source_agg",
-    "streaming_dedup_exactly_once",
-    "streaming_dedup_within_watermark",
-    "streaming_sessionize_stateful",
-    "streaming_tumbling_window",
-    "text_redact_pii",
+    # — oldest-first re-prove rotation (45), keyed on MOST RECENT green —
     # last green r10:
-    "asof_join_events_orders",
-    "asof_join_forward",
-    "bucketed_join_colocated",
-    "dedup_exact",
-    "dedup_incremental_ingest",
-    "domain_registrable_profile",
-    "events_from_orc",
-    "exact_percentiles",
-    "full_outer_reconcile",
-    "geo_haversine_knn",
-    "geo_morton_bucket",
-    "global_row_index_scalable",
+    "global_running_sum_scalable",
+    "grouping_sets_agg",
+    "histogram_width_bucket",
+    "jaccard_prefix_filter_pairs",
+    "join_null_safe",
+    "key_skew_report",
+    "merge_upsert_snapshot",
+    "multimodal_binaryfile_ingest",
+    "multimodal_featurize_knn",
+    "multimodal_frame_sample",
+    "multimodal_ppm_pixel_decode",
+    "multimodal_resize_chain",
+    "ngram_jaccard_pairs",
+    "ntile_price_quartiles",
+    "orc_source_roundtrip",
+    "pivot_status_by_year",
+    "posexplode_tokens",
+    "salted_skew_agg",
+    "scan_merge_schema",
+    "scd2_value_intervals",
+    "share_of_total_window",
+    "streaming_sliding_window",
+    "streaming_static_enrich",
+    "text_normalize",
+    "union_by_name",
+    "unpivot_part_attrs",
+    "url_normalize_dedup",
+    "window_percent_rank",
+    "window_range_frame",
+    "yoy_revenue_change",
+    # last green r11:
+    "agg_arg_extremes",
+    "array_higher_order",
+    "basket_cooccurrence_pairs",
+    "bpe_pair_counts",
+    "chi2_lang_source",
+    "cohort_retention_matrix",
+    "corpus_byte_histogram",
+    "corpus_snapshot_diff",
+    "doc_chunk_windows",
+    "dq_constraint_report",
+    "drift_ks_two_sample",
+    "embedding_centroid_per_label",
+    "embedding_quantize_int8",
+    "event_mix_gini_by_weekday",
+    "ewma_truncated_k8",
 )
 
 # (The retired r8/r9 window generations and their per-slot retirement
