@@ -17,6 +17,9 @@ These are the 100 TB levers (SURVEY.md §7.2 step 8):
   its input content. ``stage_once`` (parquet) and ``shared_stage`` (any
   writer) commit through ``_commit_stage``; ``stage_bucketed_tables``
   is the catalog-registered variant.
+- **Concurrent driver actions**: ``concurrent_actions`` overlaps
+  independent Spark actions on driver threads, folding N job floors
+  into about one.
 """
 
 from __future__ import annotations
@@ -156,6 +159,21 @@ def stage_once(
     _commit_stage(path, lambda p: df.write.parquet(p), ("_SUCCESS",))
     scan = df.sparkSession.read.parquet(path)
     return (scan, path) if return_path else scan
+
+
+def concurrent_actions(*actions: Callable[[], object]) -> list:
+    """Run independent zero-argument driver actions on one thread each
+    and return their results in argument order. Spark job submission
+    is thread-safe and the scheduler runs concurrent jobs fine, so N
+    independent jobs pay about one job floor of driver wall instead of
+    N (guide §2.6). Every action runs to completion before the first
+    failure in argument order is raised: no job is left running behind
+    an error."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = [pool.submit(a) for a in actions]
+    return [f.result() for f in futures]
 
 
 def stage_bucketed_tables(
@@ -349,17 +367,6 @@ def salted_join(
     replicated_r = small.select("*", salts)
     out = salted_l.join(replicated_r, on=[on, _SALT], how=how)
     return out.drop(_SALT)
-
-
-def repartition_for_cascade(
-    df: DataFrame, keys: Sequence[str], n: int | None = None
-) -> DataFrame:
-    """Pre-shuffle once on the cascade key so every downstream
-    join/window/agg on the same keys reuses the exchange (the
-    in-memory analogue of bucketing — what the unified merge does with
-    PropertyID before J3-J5/W1)."""
-    cols: list[Column] = [F.col(k) for k in keys]
-    return df.repartition(n, *cols) if n else df.repartition(*cols)
 
 
 def _shard_cutpoints(

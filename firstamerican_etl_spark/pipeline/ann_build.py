@@ -41,9 +41,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from firstamerican_etl_spark.sources.io import load_table
+from firstamerican_etl_spark.operators.scale import concurrent_actions
+from firstamerican_etl_spark.sources.io import load_table, local_df
 
 _DIM = 64
+#: on-disk schemas of the two index tables; explicit schemas on every
+#: read skip the footer-inference driver jobs (guide §2.6 job floors)
+_ASSIGNMENTS_SCHEMA = "vec_id bigint, v array<double>, cell_id int"
+_CENTROIDS_SCHEMA = "cell_id int, centroid array<double>"
 
 
 @dataclass
@@ -57,17 +62,8 @@ class AnnIndexStats:
 
 
 def _cent_df(spark: SparkSession, centroids: list[tuple[int, list[float]]]):
-    # Arrow path (pandas in, explicit schema): the plain list-of-rows
-    # createDataFrame falls back to RDD pickling, which spins a Python
-    # worker per call — measured ~3.5 s for 16 rows on local[32],
-    # and this constructor runs once per Lloyd round. Arrow ships the
-    # same 16 rows in ~0.15 s with an identical LocalTableScan plan.
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {"cell_id": [c for c, _ in centroids], "centroid": [v for _, v in centroids]}
-    )
-    return spark.createDataFrame(pdf, "cell_id int, centroid array<double>")
+    # runs once per Lloyd round, so it takes local_df's Arrow path
+    return local_df(spark, centroids, _CENTROIDS_SCHEMA)
 
 
 def _assign_cells(emb: DataFrame, cent_df: DataFrame) -> DataFrame:
@@ -172,54 +168,40 @@ def _train_index(
 
     cent_df = _cent_df(spark, centroids)
     final = _assign_cells(emb, cent_df)
-    sizes: list = []
 
     # The three tail actions are independent driver-side jobs (tiny
     # centroid write ∥ partitioned assignment write ∥ size report);
-    # running them on threads folds three job floors into one wall
-    # (the pipeline/run.py concurrency pattern). The size aggregate
-    # reads the just-written files so the report reflects what is ON
-    # DISK, and is ordered after the assignment write's barrier.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # running them on threads folds three job floors into one wall.
+    # The size aggregate reads the just-written files so the report
+    # reflects what is ON DISK, and is ordered after the assignment
+    # write's barrier.
     def _write_cent() -> None:
         cent_df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(out_dir, "centroids.parquet")
         )
 
-    def _write_assign_and_sizes() -> None:
+    def _write_assign_and_sizes() -> list:
         final.write.mode("overwrite").partitionBy("cell_id").parquet(
             os.path.join(out_dir, "assignments.parquet")
         )
-        sizes.extend(
-            spark.read.schema("vec_id bigint, v array<double>, cell_id int")
+        return (
+            spark.read.schema(_ASSIGNMENTS_SCHEMA)
             .parquet(os.path.join(out_dir, "assignments.parquet"))
             .groupBy("cell_id")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(_write_cent)
-        f2 = pool.submit(_write_assign_and_sizes)
-        f1.result()
-        f2.result()
+    _, sizes = concurrent_actions(_write_cent, _write_assign_and_sizes)
     ns = [r["n"] for r in sizes]
     # training provenance for the maintenance policy
     # (ann_refresh_decision): appended mass is measured against
     # n_trained, which only a stamp written AT TRAIN TIME can know.
     # sum(ns) re-reads the just-written index, so the stamp records
     # what is ON DISK — no extra corpus scan.
-    import pandas as pd
-
-    spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "n_trained": [int(sum(ns))],
-                "n_cells": [int(n_cells)],
-                "lloyd_rounds": [int(lloyd_rounds)],
-            }
-        ),
+    local_df(
+        spark,
+        [(int(sum(ns)), int(n_cells), int(lloyd_rounds))],
         "n_trained bigint, n_cells int, lloyd_rounds int",
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "train_meta.parquet")
@@ -328,35 +310,24 @@ def append_ann_index(
     # job floors).
     # The remaining two preflight actions (fused guard, centroid
     # collect) share no ordering — concurrent driver threads; the
-    # guard exceptions are re-raised in the original order below.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # guard exceptions below are raised before the centroids are used.
     ids = new.select("vec_id")
-    existing_ids = spark.read.schema(
-        "vec_id bigint, v array<double>, cell_id int"
-    ).parquet(assign_path).select("vec_id")
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_guard = pool.submit(
-            lambda: ids.join(
-                existing_ids.withColumn("_hit", F.lit(1)), "vec_id", "left"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct("vec_id").alias("nd"),
-                F.count("_hit").alias("ndup"),
-            )
-            .collect()[0]
+    existing_ids = (
+        spark.read.schema(_ASSIGNMENTS_SCHEMA).parquet(assign_path).select("vec_id")
+    )
+    guard, cent_rows = concurrent_actions(
+        lambda: ids.join(
+            existing_ids.withColumn("_hit", F.lit(1)), "vec_id", "left"
         )
-        f_cent = pool.submit(
-            lambda: spark.read.schema(
-                "cell_id int, centroid array<double>"
-            ).parquet(cent_path).collect()
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("vec_id").alias("nd"),
+            F.count("_hit").alias("ndup"),
         )
-        guard = f_guard.result()
-        n_rows, n_distinct, n_dup = (
-            int(guard["n"]), int(guard["nd"]), int(guard["ndup"])
-        )
-        cent_rows = f_cent.result()
+        .collect()[0],
+        lambda: spark.read.schema(_CENTROIDS_SCHEMA).parquet(cent_path).collect(),
+    )
+    n_rows, n_distinct, n_dup = int(guard["n"]), int(guard["nd"]), int(guard["ndup"])
     if n_dup:
         raise ValueError(
             f"{n_dup} vec_ids in the append batch already exist in the "
@@ -383,21 +354,17 @@ def append_ann_index(
     # post-write stats: the on-disk size report and the batch stats are
     # independent — overlap them (§2.6); appended + touched fuse into
     # ONE aggregate over the checkpointed batch (two jobs before r14)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_sizes = pool.submit(
-            lambda: spark.read.schema("vec_id bigint, v array<double>, cell_id int").parquet(assign_path)
-            .groupBy("cell_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        f_batch_stats = pool.submit(
-            lambda: assigned.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct("cell_id").alias("t"),
-            ).collect()[0]
-        )
-        sizes = f_sizes.result()
-        batch_stats = f_batch_stats.result()
+    sizes, batch_stats = concurrent_actions(
+        lambda: spark.read.schema(_ASSIGNMENTS_SCHEMA)
+        .parquet(assign_path)
+        .groupBy("cell_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect(),
+        lambda: assigned.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("cell_id").alias("t"),
+        ).collect()[0],
+    )
     ns = [int(r["n"]) for r in sizes]
     appended = int(batch_stats["n"])
     touched = int(batch_stats["t"])
@@ -605,7 +572,7 @@ def query_ann_index(
     return), not the source table."""
     if probes_df is not None:
         # ground truth = what serving can actually return
-        emb = spark.read.schema("vec_id bigint, v array<double>, cell_id int").parquet(
+        emb = spark.read.schema(_ASSIGNMENTS_SCHEMA).parquet(
             os.path.join(out_dir, "assignments.parquet")
         ).select("vec_id", "v")
         probe_src = probes_df.select("vec_id", "v")
@@ -616,27 +583,18 @@ def query_ann_index(
         probe_src = emb
     # probe selection and centroid fetch are independent driver jobs —
     # overlap them (r14, guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_probes = pool.submit(
-            lambda: probe_src.select(
-                "vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("h")
-            )
-            .orderBy(F.col("h").desc(), "vec_id")  # disjoint from the seed end
-            .limit(n_probes)
-            .collect()
+    probes, cent_rows = concurrent_actions(
+        lambda: probe_src.select(
+            "vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("h")
         )
-        f_cents = pool.submit(
-            lambda: spark.read.schema("cell_id int, centroid array<double>").parquet(
-                os.path.join(out_dir, "centroids.parquet")
-            ).collect()
-        )
-        probes = f_probes.result()
-        cents = {
-            r["cell_id"]: [float(x) for x in r["centroid"]]
-            for r in f_cents.result()
-        }
+        .orderBy(F.col("h").desc(), "vec_id")  # disjoint from the seed end
+        .limit(n_probes)
+        .collect(),
+        lambda: spark.read.schema(_CENTROIDS_SCHEMA)
+        .parquet(os.path.join(out_dir, "centroids.parquet"))
+        .collect(),
+    )
+    cents = {r["cell_id"]: [float(x) for x in r["centroid"]] for r in cent_rows}
 
     def _near_cells(pv: list[float]) -> list[int]:
         d = sorted(
@@ -650,23 +608,12 @@ def query_ann_index(
         for r in probes
     ]
     wanted = sorted({c for _pid, _v, cells in probe_cells for c in cells})
-    # Arrow path for the probe frame (same rationale as _cent_df: the
-    # list-of-rows constructor pays an RDD-pickle Python worker).
-    import pandas as pd
-
-    probe_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "probe_id": [pid for pid, _v, _c in probe_cells],
-                "pv": [v for _pid, v, _c in probe_cells],
-                "cells": [cells for _pid, _v, cells in probe_cells],
-            }
-        ),
-        "probe_id bigint, pv array<double>, cells array<int>",
+    probe_df = local_df(
+        spark, probe_cells, "probe_id bigint, pv array<double>, cells array<int>"
     )
 
     # candidate side: partition-pruned scan of ONLY the probed cells
-    cand = spark.read.schema("vec_id bigint, v array<double>, cell_id int").parquet(
+    cand = spark.read.schema(_ASSIGNMENTS_SCHEMA).parquet(
         os.path.join(out_dir, "assignments.parquet")
     ).filter(
         F.col("cell_id").isin(wanted)

@@ -45,7 +45,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from firstamerican_etl_spark.operators.graph import connected_components
-from firstamerican_etl_spark.operators.scale import global_running_sum
+from firstamerican_etl_spark.operators.scale import (
+    concurrent_actions,
+    global_running_sum,
+)
 from firstamerican_etl_spark.plans.dedupplans import (
     _NORM,
     MINHASH_SCHEME_VERSION,
@@ -358,31 +361,19 @@ def build_corpus(
     # (n_bins needs a DISTINCT count, which observed metrics disallow —
     # a column-pruned scan of just the written bin_id column is the
     # remaining read.)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        sinks = []
-        if write_index:
-            idx = _index_dir(out_dir)
-            sinks.append(
-                pool.submit(
-                    lambda: exact_fp.select("_fp", "doc_id")
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(idx, "fingerprints"))
-                )
-            )
-            sinks.append(
-                pool.submit(
-                    lambda: bands.write.mode("overwrite").parquet(
-                        os.path.join(idx, "bands")
-                    )
-                )
-            )
-            sinks.append(pool.submit(_write_scheme_stamp, spark, idx))
-        f_bins = pool.submit(lambda: out.select("bin_id").distinct().count())
-        for f in sinks:
-            f.result()
-        n_bins = f_bins.result()
+    sinks = []
+    if write_index:
+        idx = _index_dir(out_dir)
+        sinks = [
+            lambda: exact_fp.select("_fp", "doc_id")
+            .write.mode("overwrite")
+            .parquet(os.path.join(idx, "fingerprints")),
+            lambda: bands.write.mode("overwrite").parquet(os.path.join(idx, "bands")),
+            lambda: _write_scheme_stamp(spark, idx),
+        ]
+    *_, n_bins = concurrent_actions(
+        *sinks, lambda: out.select("bin_id").distinct().count()
+    )
     split_row = obs_split.get
     return CorpusBuildStats(
         n_raw=int(obs_raw.get["n"]),
@@ -479,10 +470,6 @@ def build_corpus_delta(
         "doc_id bigint, band_id int, band_hash bigint"
     ).parquet(bands_path)
 
-    # the equivalence contract above needs monotone ids; a violation
-    # would silently flip keep-the-min decisions, so fail loud
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Observation
 
     # The delta is ACTION-FLOOR-bound at small batch sizes (~14 fixed
@@ -497,26 +484,20 @@ def build_corpus_delta(
     # delta against an empty corpus has nothing to dedup against and
     # the full build's post-write read is the guarded path)
     existing = spark.read.parquet(out_dir)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_idx = pool.submit(
-            lambda: idx_fp.agg(F.max("doc_id").alias("m")).first()["m"]
-        )
-        f_pre = pool.submit(
-            lambda: new_docs.agg(
-                F.min("doc_id").alias("m"), F.count(F.lit(1)).alias("n")
-            ).first()
-        )
-        f_bin = pool.submit(
-            lambda: existing.agg(F.max("bin_id").alias("m")).first()["m"]
-        )
-        max_indexed = f_idx.result()
-        pre = f_pre.result()
-        # None-check, not truthiness: an existing corpus whose packing
-        # fit everything into bin 0 has max(bin_id) == 0, which `or`
-        # would treat as "no bins" and collide the delta's bins with it
-        max_bin = f_bin.result()
-        bin_base = (max_bin if max_bin is not None else -1) + 1
+    max_indexed, pre, max_bin = concurrent_actions(
+        lambda: idx_fp.agg(F.max("doc_id").alias("m")).first()["m"],
+        lambda: new_docs.agg(
+            F.min("doc_id").alias("m"), F.count(F.lit(1)).alias("n")
+        ).first(),
+        lambda: existing.agg(F.max("bin_id").alias("m")).first()["m"],
+    )
+    # None-check, not truthiness: an existing corpus whose packing
+    # fit everything into bin 0 has max(bin_id) == 0, which `or`
+    # would treat as "no bins" and collide the delta's bins with it
+    bin_base = (max_bin if max_bin is not None else -1) + 1
     min_new, n_raw = pre["m"], int(pre["n"])
+    # the equivalence contract above needs monotone ids; a violation
+    # would silently flip keep-the-min decisions, so fail loud
     if max_indexed is not None and min_new is not None and min_new <= max_indexed:
         raise ValueError(
             f"delta batch doc_ids must exceed every indexed id "
@@ -594,6 +575,10 @@ def build_corpus_delta(
         )
         return int(obs_bridge.get["n"]), bridged
 
+    # Not concurrent_actions: the audit is a background future that the
+    # tail awaits only after commit, and it is cancelled on error.
+    from concurrent.futures import ThreadPoolExecutor
+
     audit_pool = ThreadPoolExecutor(max_workers=1)
     try:
         f_bridge = audit_pool.submit(_bridge_audit)
@@ -620,8 +605,6 @@ def _delta_tail(
     """Loser drop → quality → redact → pack → commit for the delta
     (split out of build_corpus_delta so the audit thread's lifecycle
     wraps it in one try/finally)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Observation
 
     losers = labels.filter(F.col("node") != F.col("label")).select(
@@ -707,23 +690,11 @@ def _delta_tail(
     # appends, all reading cached/checkpointed frames) commit on
     # concurrent driver threads; obs.get blocks until the corpus
     # write's own action fires.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_main = pool.submit(
-            lambda: observed.write.mode("append")
-            .partitionBy("split")
-            .parquet(out_dir)
-        )
-        f_fp = pool.submit(
-            lambda: exact.select("_fp", "doc_id")
-            .write.mode("append")
-            .parquet(fp_path)
-        )
-        f_bands = pool.submit(
-            lambda: batch_bands.write.mode("append").parquet(bands_path)
-        )
-        f_main.result()
-        f_fp.result()
-        f_bands.result()
+    concurrent_actions(
+        lambda: observed.write.mode("append").partitionBy("split").parquet(out_dir),
+        lambda: exact.select("_fp", "doc_id").write.mode("append").parquet(fp_path),
+        lambda: batch_bands.write.mode("append").parquet(bands_path),
+    )
     row = obs.get
     # the corpus + sidecar writes committed — NOW the bridge record
     # may land (an aborted batch never records phantom bridges)

@@ -26,6 +26,7 @@ CLI (O1, fa-etl.py:600-609)::
 from __future__ import annotations
 
 import argparse
+import functools
 import logging
 import os
 import shutil
@@ -34,6 +35,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from firstamerican_etl_spark.operators.scale import concurrent_actions
 from firstamerican_etl_spark.pipeline.convert import (
     clean_deed,
     clean_prop,
@@ -455,16 +457,13 @@ def _run_pipeline_impl(
     # of the other families' chains, so the four chains run
     # concurrently. This is job-level parallelism, not a data hazard:
     # no two chains touch the same paths or catalog entries.
-    from concurrent.futures import ThreadPoolExecutor
-
     t_fam = time.perf_counter()
-    with ThreadPoolExecutor(max_workers=len(families)) as pool:
-        futures = {
-            fam: pool.submit(process_family, fam, filenames)
+    concurrent_actions(
+        *(
+            functools.partial(process_family, fam, filenames)
             for fam, filenames in families.items()
-        }
-        for fam, fut in futures.items():
-            fut.result()  # propagate the first failure
+        )
+    )
     log.info("all family chains done in %.2fs", time.perf_counter() - t_fam)
 
     # unified merge (fa-etl.py:583-589), re-reading staged output so the

@@ -605,7 +605,10 @@ def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pure broadcast-literal comparison and one |segments|-row
     aggregate. Ties at a cutpoint fall to the lower code by value on
     both engines."""
-    from firstamerican_etl_spark.operators.scale import quartile_cutpoints
+    from firstamerican_etl_spark.operators.scale import (
+        concurrent_actions,
+        quartile_cutpoints,
+    )
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     e = ev.select(
@@ -640,13 +643,9 @@ def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the others' tails), folding three job floors into ~one at every
     # scale. Results are unchanged: the passes share no state beyond
     # the materialized checkpoint.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_r = pool.submit(cuts, "recency_d")
-        f_f = pool.submit(cuts, "freq")
-        f_m = pool.submit(cuts, "money")
-        rcuts, fcuts, mcuts = f_r.result(), f_f.result(), f_m.result()
+    rcuts, fcuts, mcuts = concurrent_actions(
+        lambda: cuts("recency_d"), lambda: cuts("freq"), lambda: cuts("money")
+    )
     if rcuts is None:  # zero users: empty report, stable schema
         return spark.createDataFrame(
             [], "segment int, n_users bigint, avg_money_cents double"

@@ -242,10 +242,6 @@ def geo_knn_grid_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _morton_bits() -> int:
-    return 8
-
-
 def morton_code(ybin: Column, xbin: Column, bits: int = 8) -> Column:
     """Interleave ``bits`` low bits of two non-negative ints into a
     Z-order (Morton) code — unrolled shifts/masks, fully codegen'd."""

@@ -28,7 +28,6 @@ from firstamerican_etl_spark.plans.registry import register
 from firstamerican_etl_spark.sources.io import load_table, load_table_spread
 
 _DX = "decimal(18,2)"   # quantities (integer-valued) and 2-dec prices: exact
-_DS = "decimal(38,6)"   # power-sum accumulator
 
 
 @register(

@@ -322,63 +322,10 @@ def extract_zips(zip_paths: list[str], out_dir: str) -> list[str]:
 
     if len(jobs) <= 1:
         return [_extract(j) for j in jobs]
+    # Not concurrent_actions: these are not Spark actions, and the
+    # member count reaches the thousands, so the pool stays capped.
     with ThreadPoolExecutor(max_workers=min(16, len(jobs))) as pool:
         return list(pool.map(_extract, jobs))
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_files: int | None = None,
-    target_mb_per_file: int = 512,
-) -> int:
-    """Small-files compaction: rewrite a parquet dataset into
-    ``target_files`` outputs (default: sized from the dataset's bytes
-    at ``target_mb_per_file``). The perennial ops problem at scale —
-    streaming sinks and fine-grained partitions produce thousands of
-    KB-sized files whose open/footer cost dominates scans. Rewrites
-    via a staging dir + atomic-ish rename so a crash never leaves the
-    dataset half-compacted. Returns the file count written."""
-    import re as _re
-    import shutil
-
-    # refuse hive-partitioned layouts: a coalesce rewrite would flatten
-    # key=value directories into data columns, silently destroying
-    # partition pruning for every downstream reader — that layout's
-    # maintenance pass is compact_parquet_dir, which glues files
-    # per-partition and preserves directory names verbatim
-    parts = [
-        e.name
-        for e in os.scandir(path)
-        if e.is_dir() and _re.match(r"^[^=./][^=/]*=", e.name)
-    ]
-    if parts:
-        raise ValueError(
-            f"{path} is hive-partitioned ({parts[0]}, ...); use "
-            "compact_parquet_dir, which preserves the partition layout"
-        )
-    # mergeSchema: the single-footer default would take the schema from
-    # one arbitrary file, and a layout-only maintenance pass would then
-    # silently DROP any column later appends added (r10 review — the
-    # data would be unrecoverable after the rewrite replaces the dir)
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if target_files is None:
-        total_bytes = sum(
-            f.stat().st_size for f in Path(path).rglob("*.parquet")
-        )
-        target_files = max(1, int(total_bytes / (target_mb_per_file * 1024**2)))
-    staging = path.rstrip("/") + "__compacting"
-    shutil.rmtree(staging, ignore_errors=True)  # stale staging from a crash
-    df.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    backup = path.rstrip("/") + "__precompact"
-    # a crash mid-rmtree on a PREVIOUS run can leave a non-empty backup
-    # dir; os.rename cannot replace it, so every later compaction would
-    # fail AFTER paying the full rewrite (r10 review)
-    shutil.rmtree(backup, ignore_errors=True)
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
-    return len(list(Path(path).rglob("*.parquet")))
 
 
 def write_orc(
@@ -646,7 +593,9 @@ def compact_parquet_dir(
             .parquet(tmp)
         )
     else:
-        df = spark.read.parquet(path)
+        # mergeSchema for the same reason as the partitioned branch:
+        # the single-footer read drops any column a later append added
+        df = spark.read.option("mergeSchema", "true").parquet(path)
         df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
     os.rename(path, trash)
     os.rename(tmp, path)

@@ -106,3 +106,30 @@ def test_compaction_preserves_ambiguous_partition_values(spark, tmp_path):
     assert sorted(
         r["split"] for r in got.select("split").distinct().collect()
     ) == [0, 1, 2]  # downstream readers re-infer exactly as before
+
+
+def test_compaction_keeps_a_column_added_by_a_later_append(spark, tmp_path):
+    """An unpartitioned dir whose later append added a column keeps
+    that column through compaction: the rewrite must read the schema
+    merged over every file, not the one footer Spark's default read
+    takes (the first file by path). The appended file is named to sort
+    last, as sequence-numbered landings do, so that footer is a
+    pre-append one."""
+    import glob
+
+    d = str(tmp_path / "evolved")
+    spark.range(200).repartition(8).write.parquet(d)
+    spark.range(200, 210).coalesce(1).withColumn(
+        "extra", F.col("id") * 2
+    ).write.mode("append").parquet(d)
+    before = set(glob.glob(os.path.join(d, "part-*.parquet")))
+    wide = [f for f in before if len(spark.read.parquet(f).columns) == 2]
+    assert len(before) == 9 and len(wide) == 1
+    os.rename(wide[0], os.path.join(d, "part-99999-appended.parquet"))
+
+    rep = compact_parquet_dir(spark, d, target_bytes=1 << 30)
+    assert rep["compacted"] is True
+    got = spark.read.option("mergeSchema", "true").parquet(d)
+    assert sorted(got.columns) == ["extra", "id"]
+    assert got.count() == 210
+    assert got.filter(F.col("extra") == F.col("id") * 2).count() == 10

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from firstamerican_etl_spark.operators.scale import (
+    concurrent_actions,
     join_is_colocated,
     salted_groupby_agg,
     salted_join,
@@ -106,19 +107,6 @@ def test_salted_join_matches_plain(spark, sf_dir):
     s = salted.agg(F.sum(F.col("l_quantity") * F.col("o_totalprice"))).collect()[0][0]
     p = plain.agg(F.sum(F.col("l_quantity") * F.col("o_totalprice"))).collect()[0][0]
     assert s == pytest.approx(p)
-
-
-def test_compact_parquet(spark, sf_dir, tmp_path):
-    from firstamerican_etl_spark.sources.io import compact_parquet
-
-    path = str(tmp_path / "shattered")
-    o = load_table(spark, sf_dir, "orders")
-    o.repartition(16).write.parquet(path)  # 16 small files
-    before = sorted(map(str, spark.read.parquet(path).collect()))
-    n = compact_parquet(spark, path, target_files=2)
-    assert n == 2
-    after = sorted(map(str, spark.read.parquet(path).collect()))
-    assert before == after
 
 
 def test_global_running_sum_matches_naive_window(spark, sf_dir):
@@ -569,3 +557,45 @@ def test_simhash_vote_rejects_empty_hash_array():
     batch = pd.DataFrame({"doc_id": [1, 2, 3], "hs": [[5, 6], [], [7]]})
     with pytest.raises(ValueError, match="doc_id 2"):
         list(vote([batch]))
+
+
+def test_concurrent_actions_returns_results_in_argument_order():
+    """The first action finishes LAST (it waits for the second), and
+    its result still comes back first. The wait also proves the
+    actions run concurrently: run serially, it would time out."""
+    import threading
+
+    second_done = threading.Event()
+
+    def first():
+        return "first" if second_done.wait(timeout=10) else "serial"
+
+    def second():
+        second_done.set()
+        return "second"
+
+    assert concurrent_actions(first, second, lambda: 3) == ["first", "second", 3]
+
+
+def test_concurrent_actions_raises_after_every_action_finishes():
+    """The first failure in argument order surfaces, and only after a
+    slower action that was still running has finished: no job is left
+    running behind the error."""
+    import threading
+    import time
+
+    slow_done = threading.Event()
+
+    def fail():
+        raise ValueError("first failure")
+
+    def slow():
+        time.sleep(0.3)
+        slow_done.set()
+
+    def fail_later():
+        raise KeyError("second failure")
+
+    with pytest.raises(ValueError, match="first failure"):
+        concurrent_actions(fail, slow, fail_later)
+    assert slow_done.is_set()

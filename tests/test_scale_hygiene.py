@@ -144,3 +144,49 @@ def test_no_session_global_conf_mutation_in_query_modules():
         "session-global conf mutation inside query modules:\n"
         + "\n".join(offenders)
     )
+
+
+def test_thread_pools_only_in_sanctioned_places():
+    """Concurrent Spark actions go through operators/scale.
+    concurrent_actions, the one place per-stage job-group tagging can
+    be added. Two other pools are deliberate: extract_zips maps zlib
+    member extraction (not Spark actions; thousands of members on a
+    national run), and build_corpus_delta's bridge audit is a
+    background future that is cancelled on error."""
+    import ast
+    import glob as _glob
+    import os as _os
+
+    root = _os.path.join(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+        "firstamerican_etl_spark",
+    )
+
+    def _uses(node) -> bool:
+        return (
+            (isinstance(node, ast.Name) and node.id == "ThreadPoolExecutor")
+            or (isinstance(node, ast.Attribute) and node.attr == "ThreadPoolExecutor")
+            or (isinstance(node, ast.alias) and node.name == "ThreadPoolExecutor")
+        )
+
+    found = set()
+
+    def _walk(node, rel, func):
+        for child in ast.iter_child_nodes(node):
+            if _uses(child):
+                found.add((rel, func))
+            inner = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else func
+            )
+            _walk(child, rel, inner)
+
+    for path in _glob.glob(_os.path.join(root, "**", "*.py"), recursive=True):
+        rel = _os.path.relpath(path, root).replace(_os.sep, "/")
+        _walk(ast.parse(open(path).read()), rel, "<module>")
+    assert found == {
+        ("operators/scale.py", "concurrent_actions"),
+        ("sources/io.py", "extract_zips"),
+        ("pipeline/corpus_build.py", "build_corpus_delta"),
+    }
