@@ -13,7 +13,7 @@ are needed. This module supplies the ops that carry semantics:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -58,6 +58,24 @@ def top_k_per_group(
     """Generalized W1: top-k rows per group with the rank kept."""
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
+
+
+def array_pairs(arr: Column, pair: Callable[[Column, Column], Column]) -> Column:
+    """``pair(a, b)`` for every i<j pair of ``arr``'s elements, in index
+    order, as one array: the join-free in-array self-pairing that
+    posting-list and bucket expansions use instead of a self-join (the
+    upstream pipeline then runs once, not once per join side). Cost is
+    quadratic in ``size(arr)``; callers bound it (df caps, star
+    expansion past a bucket-size cap)."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda a, i: F.transform(
+                F.slice(arr, i + 2, F.greatest(F.size(arr) - i - 1, F.lit(0))),
+                lambda b: pair(a, b),
+            ),
+        )
+    )
 
 
 def left_join(

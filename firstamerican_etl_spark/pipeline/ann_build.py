@@ -49,6 +49,7 @@ _DIM = 64
 #: read skip the footer-inference driver jobs (guide §2.6 job floors)
 _ASSIGNMENTS_SCHEMA = "vec_id bigint, v array<double>, cell_id int"
 _CENTROIDS_SCHEMA = "cell_id int, centroid array<double>"
+_TRAIN_META_SCHEMA = "n_trained bigint, n_cells int, lloyd_rounds int"
 
 
 @dataclass
@@ -202,7 +203,7 @@ def _train_index(
     local_df(
         spark,
         [(int(sum(ns)), int(n_cells), int(lloyd_rounds))],
-        "n_trained bigint, n_cells int, lloyd_rounds int",
+        _TRAIN_META_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "train_meta.parquet")
     )
@@ -424,10 +425,11 @@ def ann_refresh_decision(
             "maintenance policy; run refresh_ann_index (or rebuild with "
             "build_ann_index) once to stamp it"
         )
-    meta = spark.read.parquet(meta_path).collect()[0]
+    meta = spark.read.schema(_TRAIN_META_SCHEMA).parquet(meta_path).collect()[0]
     n_trained, n_cells = int(meta["n_trained"]), int(meta["n_cells"])
     sizes = (
-        spark.read.parquet(os.path.join(out_dir, "assignments.parquet"))
+        spark.read.schema(_ASSIGNMENTS_SCHEMA)
+        .parquet(os.path.join(out_dir, "assignments.parquet"))
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -485,12 +487,22 @@ def refresh_ann_index(
         raise ValueError(f"no committed ANN index at {out_dir}")
     if n_cells is None:
         if os.path.exists(os.path.join(meta_path, "_SUCCESS")):
-            n_cells = int(spark.read.parquet(meta_path).collect()[0]["n_cells"])
+            n_cells = int(
+                spark.read.schema(_TRAIN_META_SCHEMA)
+                .parquet(meta_path)
+                .collect()[0]["n_cells"]
+            )
         else:  # pre-policy index: fall back to the centroid count
-            n_cells = spark.read.parquet(
-                os.path.join(out_dir, "centroids.parquet")
-            ).count()
-    emb = spark.read.parquet(assign_path).select("vec_id", "v")
+            n_cells = (
+                spark.read.schema(_CENTROIDS_SCHEMA)
+                .parquet(os.path.join(out_dir, "centroids.parquet"))
+                .count()
+            )
+    emb = (
+        spark.read.schema(_ASSIGNMENTS_SCHEMA)
+        .parquet(assign_path)
+        .select("vec_id", "v")
+    )
     gen = f"{out_dir}.gen-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     try:
         stats = _train_index(spark, emb, gen, n_cells, lloyd_rounds)

@@ -302,19 +302,3 @@ def valhist_long(
         .filter(F.col("AssessmentUsed") == "Assd")
         .select("PropertyID", "Year", "Value", "MarketTotalValue", "ApprTotalValue")
     )
-
-
-def dq_leading_zero_ids(raw: DataFrame, col: str = "PropertyID") -> int:
-    """Promotes the reference's commented-out leading-zero flag
-    (fa-etl.py:68, 81-82) into a data-quality probe: counts raw
-    string ids whose long cast is LOSSY — leading zeros ("007" → 7,
-    colliding with "7") or non-numeric values (→ null). Run against
-    the raw frame BEFORE clean_* casts; a nonzero count means the id
-    column must stay a string end-to-end for this extract. One
-    distributed aggregate, no collect."""
-    c = F.trim(F.col(col))
-    as_long = c.cast("long")
-    lossy = c.isNotNull() & (
-        as_long.isNull() | (c != as_long.cast("string"))
-    )
-    return raw.filter(lossy).count()

@@ -14,10 +14,13 @@ LSH at 100 TB.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from firstamerican_etl_spark.operators.relational import array_pairs
 from firstamerican_etl_spark.plans.registry import register
 from firstamerican_etl_spark.sources.io import (
     load_table,
@@ -201,6 +204,80 @@ def exploded_word_hashes(df: DataFrame, text_col: str = "text", keep: tuple[str,
     )
 
 
+def _doc_shingles(d: DataFrame, shingle_len: int = 5) -> DataFrame:
+    """``(doc_id, n_sh, shingle)``: one row per DISTINCT
+    ``shingle_len``-word shingle hash of every doc with at least
+    ``shingle_len`` words; ``n_sh`` is the doc's distinct-shingle count.
+    The second explode(array(...)) barrier binds the shingle array, so
+    ``n_sh`` does not re-evaluate the shingle hashing."""
+    wdf = exploded_word_hashes(d).filter(F.size("wh") >= shingle_len)
+    return wdf.select(
+        "doc_id",
+        F.explode(
+            F.array(F.array_distinct(shingle_hashes_col("wh", shingle_len=shingle_len)))
+        ).alias("sh"),
+    ).select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
+
+
+def _shingle_overlap_pairs(
+    shingles: DataFrame, max_df: int | None = None
+) -> DataFrame:
+    """``(doc_a, doc_b, n_a, n_b, n_common)`` for every doc pair sharing
+    a shingle of ``_doc_shingles`` output: an inverted index (posting
+    list per shingle) with join-free in-array pair expansion, so the
+    upstream shingle pipeline runs once, not per join side, and the
+    shuffle is bounded by posting lists, never all pairs. ``max_df``
+    drops shingles in more than that many docs before the expansion
+    (CCNet-style hot-shingle cap); ``n_common`` then counts only the
+    kept shingles while ``n_a``/``n_b`` stay full set sizes."""
+    keep = F.size("ps") > 1
+    if max_df is not None:
+        keep = keep & (F.size("ps") <= F.lit(max_df))
+    postings = (
+        shingles.groupBy("shingle")
+        .agg(F.collect_list(F.struct("doc_id", "n_sh")).alias("ps"))
+        .filter(keep)
+    )
+    pair_structs = array_pairs(
+        F.col("ps"),
+        lambda a, b: F.struct(
+            F.least(a["doc_id"], b["doc_id"]).alias("doc_a"),
+            F.greatest(a["doc_id"], b["doc_id"]).alias("doc_b"),
+            F.when(a["doc_id"] < b["doc_id"], a["n_sh"])
+            .otherwise(b["n_sh"])
+            .alias("n_a"),
+            F.when(a["doc_id"] < b["doc_id"], b["n_sh"])
+            .otherwise(a["n_sh"])
+            .alias("n_b"),
+        ),
+    )
+    return (
+        postings.select(F.explode(pair_structs).alias("p"))
+        .groupBy(
+            F.col("p.doc_a").alias("doc_a"),
+            F.col("p.doc_b").alias("doc_b"),
+            F.col("p.n_a").alias("n_a"),
+            F.col("p.n_b").alias("n_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
+def _bucket_pairs(
+    arr: Column, pair: Callable[[Column, Column, bool], Column]
+) -> Column:
+    """Pair rows of one sorted bucket array: every i<j pair while
+    ``size(arr) <= _CLIQUE_CAP``, else the STAR — element 1 (the hub)
+    paired with each other member, O(bucket) rows instead of
+    O(bucket²). ``pair(a, b, star)`` builds one row."""
+    clique = array_pairs(arr, lambda a, b: pair(a, b, False))
+    star = F.transform(
+        F.slice(arr, 2, F.size(arr) - 1),
+        lambda b: pair(F.element_at(arr, 1), b, True),
+    )
+    return F.when(F.size(arr) <= _CLIQUE_CAP, clique).otherwise(star)
+
+
 def minhash_signatures(df: DataFrame, text_col: str = "text", key: str = "doc_id",
                        num_hashes: int = 32) -> DataFrame:
     """MinHash signatures as columns mh0..mh{k-1}, one row per key.
@@ -339,24 +416,9 @@ def minhash_lsh_pairs_from_bands(bands: DataFrame) -> DataFrame:
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    clique = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda a, i: F.transform(
-                F.slice(
-                    F.col("ids"), i + 2, F.greatest(F.size("ids") - i - 1, F.lit(0))
-                ),
-                lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b")),
-            ),
-        )
+    pair_structs = _bucket_pairs(
+        F.col("ids"), lambda a, b, star: F.struct(a.alias("doc_a"), b.alias("doc_b"))
     )
-    star = F.transform(
-        F.slice(F.col("ids"), 2, F.size("ids") - 1),
-        lambda b: F.struct(
-            F.element_at(F.col("ids"), 1).alias("doc_a"), b.alias("doc_b")
-        ),
-    )
-    pair_structs = F.when(F.size("ids") <= _CLIQUE_CAP, clique).otherwise(star)
     pairs = (
         buckets.select(F.explode(pair_structs).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
@@ -504,51 +566,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets (inverted index), not all pairs. Returns pairs with
     jaccard >= 0.5.
     """
-    d = load_table(spark, sf_dir, "documents")
-    wdf = exploded_word_hashes(d).filter(F.size("wh") >= 5)
-    # second explode(array(...)) barrier binds sh so n_sh doesn't
-    # re-evaluate the shingle hashing
-    docs = wdf.select(
-        "doc_id",
-        F.explode(F.array(F.array_distinct(shingle_hashes_col("wh")))).alias("sh"),
-    ).select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
-    # inverted index: posting list per shingle, join-free pair
-    # expansion (same pattern as dedup_minhash_lsh — the upstream
-    # shingle pipeline runs once, not per join side)
-    postings = (
-        docs.groupBy("shingle")
-        .agg(F.collect_list(F.struct("doc_id", "n_sh")).alias("ps"))
-        .filter(F.size("ps") > 1)
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda a, i: F.transform(
-                F.slice(
-                    F.col("ps"), i + 2, F.greatest(F.size("ps") - i - 1, F.lit(0))
-                ),
-                lambda b: F.struct(
-                    F.least(a["doc_id"], b["doc_id"]).alias("doc_a"),
-                    F.greatest(a["doc_id"], b["doc_id"]).alias("doc_b"),
-                    F.when(a["doc_id"] < b["doc_id"], a["n_sh"])
-                    .otherwise(b["n_sh"])
-                    .alias("n_a"),
-                    F.when(a["doc_id"] < b["doc_id"], b["n_sh"])
-                    .otherwise(a["n_sh"])
-                    .alias("n_b"),
-                ),
-            ),
-        )
-    )
-    pairs = (
-        postings.select(F.explode(pair_structs).alias("p"))
-        .groupBy(
-            F.col("p.doc_a").alias("doc_a"),
-            F.col("p.doc_b").alias("doc_b"),
-            F.col("p.n_a").alias("n_a"),
-            F.col("p.n_b").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    pairs = _shingle_overlap_pairs(
+        _doc_shingles(load_table(spark, sf_dir, "documents"))
     )
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     return pairs.select(
@@ -658,22 +677,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(star).alias("star"),
         )
 
-    clique = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda a, i: F.transform(
-                F.slice(
-                    F.col("ds"), i + 2, F.greatest(F.size("ds") - i - 1, F.lit(0))
-                ),
-                lambda b: _pair(a, b, star=False),
-            ),
-        )
-    )
-    star = F.transform(
-        F.slice(F.col("ds"), 2, F.size("ds") - 1),
-        lambda b: _pair(F.element_at(F.col("ds"), 1), b, star=True),
-    )
-    pair_structs = F.when(F.size("ds") <= _CLIQUE_CAP, clique).otherwise(star)
+    pair_structs = _bucket_pairs(F.col("ds"), _pair)
     # star rows are CONNECTIVITY edges, exempt from the hamming
     # verification: filtering them at <= 3 would sever hub links and
     # orphan near-dup pairs whose members are both far from the hub
@@ -1325,8 +1329,6 @@ def jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the index lossless for every pair the (shared, rounded) oracle
     # emits — at the cost of prefixes one shingle longer.
     t_num, t_den = 4999, 10000
-    d = load_table(spark, sf_dir, "documents")
-    wdf = exploded_word_hashes(d).filter(F.size("wh") >= 5)
     # Stage the exploded shingle frame ONCE: four branches consume it
     # (document frequency, the ranked prefix, and both verification
     # sides) and Catalyst would re-run the corpus explode per branch —
@@ -1334,14 +1336,7 @@ def jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from firstamerican_etl_spark.operators.scale import stage_once
 
     docs = stage_once(
-        wdf.select(
-            "doc_id",
-            F.explode(
-                F.array(F.array_distinct(shingle_hashes_col("wh")))
-            ).alias("sh"),
-        ).select(
-            "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle")
-        ),
+        _doc_shingles(load_table(spark, sf_dir, "documents")),
         "jaccard_prefix_shingles",
         reuse_key=staging_tag(sf_dir, "documents"),
     )
@@ -1372,21 +1367,11 @@ def jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("ds") > 1)
         .select(
             F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ds"),
-                        lambda a, i: F.transform(
-                            F.slice(
-                                F.col("ds"),
-                                i + 2,
-                                F.greatest(F.size("ds") - i - 1, F.lit(0)),
-                            ),
-                            lambda b: F.struct(
-                                F.least(a, b).alias("doc_a"),
-                                F.greatest(a, b).alias("doc_b"),
-                            ),
-                        ),
-                    )
+                array_pairs(
+                    F.col("ds"),
+                    lambda a, b: F.struct(
+                        F.least(a, b).alias("doc_a"), F.greatest(a, b).alias("doc_b")
+                    ),
                 )
             ).alias("p")
         )
@@ -1493,23 +1478,13 @@ def minhash_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         reuse_key=tag,
     )
 
-    # exact 3-gram truth, same machinery as ngram_jaccard_pairs but at
-    # the twin's shingle length; docs with <3 words carry no full
-    # 3-gram window and are excluded on BOTH sides (under ANSI an
-    # element_at past the array end throws, so the filter is also what
-    # keeps the driver's ANSI session green)
-    wdf = exploded_word_hashes(load_table(spark, sf_dir, "documents")).filter(
-        F.size("wh") >= 3
-    )
+    # exact 3-gram truth over the same shingles as ngram_jaccard_pairs
+    # but at the twin's shingle length; docs with <3 words carry no
+    # full 3-gram window and are excluded on BOTH sides (under ANSI an
+    # element_at past the array end throws, so _doc_shingles' length
+    # filter is also what keeps the driver's ANSI session green)
     docs = stage_once(
-        wdf.select(
-            "doc_id",
-            F.explode(
-                F.array(F.array_distinct(shingle_hashes_col("wh", shingle_len=3)))
-            ).alias("sh"),
-        ).select(
-            "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle")
-        ),
+        _doc_shingles(load_table(spark, sf_dir, "documents"), shingle_len=3),
         "minhash_eval_shingles",
         reuse_key=tag,
     )
@@ -1612,58 +1587,20 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ngram_jaccard_pairs); the ppm ratios floor-quantize integer
     counts — bit-identical to the oracle.
 
-    Scale shape: identical candidate machinery to ngram_jaccard_pairs —
-    ONE tokenize+shingle pass (exploded_word_hashes Generate barrier),
-    inverted-index postings with join-free in-array pair expansion, the
-    shuffle bounded by posting lists, never all-pairs. Production runs
-    cap posting-list df (CCNet-style hot-shingle drop) before the
-    expansion; kept exact here because the oracle demands the lossless
-    pair set."""
+    Scale shape: the candidates come from ``_shingle_overlap_pairs``
+    over ``_doc_shingles``, as in ngram_jaccard_pairs — ONE
+    tokenize+shingle pass, inverted-index postings with join-free
+    in-array pair expansion, the shuffle bounded by posting lists,
+    never all-pairs. No df cap (``max_df``, as in
+    jaccard_df_capped_pairs) here, because the oracle demands the
+    lossless pair set."""
     # cpu_spread (r14, guide §2.5): tokenize/hash/shingle is per-doc
     # CPU on a low-split scan — spread docs across cores first
     # (measured −32% at sf0.1; no-op at scale). Shingle sets and
     # intersection counts are integers over per-doc content:
     # partitioning cannot change any result bit.
-    d = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    wdf = exploded_word_hashes(d).filter(F.size("wh") >= 5)
-    docs = wdf.select(
-        "doc_id",
-        F.explode(F.array(F.array_distinct(shingle_hashes_col("wh")))).alias("sh"),
-    ).select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
-    postings = (
-        docs.groupBy("shingle")
-        .agg(F.collect_list(F.struct("doc_id", "n_sh")).alias("ps"))
-        .filter(F.size("ps") > 1)
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda a, i: F.transform(
-                F.slice(
-                    F.col("ps"), i + 2, F.greatest(F.size("ps") - i - 1, F.lit(0))
-                ),
-                lambda b: F.struct(
-                    F.least(a["doc_id"], b["doc_id"]).alias("doc_a"),
-                    F.greatest(a["doc_id"], b["doc_id"]).alias("doc_b"),
-                    F.when(a["doc_id"] < b["doc_id"], a["n_sh"])
-                    .otherwise(b["n_sh"])
-                    .alias("n_a"),
-                    F.when(a["doc_id"] < b["doc_id"], b["n_sh"])
-                    .otherwise(a["n_sh"])
-                    .alias("n_b"),
-                ),
-            ),
-        )
-    )
-    pairs = (
-        postings.select(F.explode(pair_structs).alias("p"))
-        .groupBy(
-            F.col("p.doc_a").alias("doc_a"),
-            F.col("p.doc_b").alias("doc_b"),
-            F.col("p.n_a").alias("n_a"),
-            F.col("p.n_b").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    pairs = _shingle_overlap_pairs(
+        _doc_shingles(load_table_spread(spark, sf_dir, "documents", "doc_id"))
     )
     cont_ab = F.floor(
         F.col("n_common") * F.lit(1000000.0) / F.col("n_a") + F.lit(0.5)
@@ -1897,49 +1834,10 @@ def jaccard_df_capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fall below the threshold, which is precisely CCNet's intent. The
     oracle applies the identical cap in SQL (``HAVING count(*) <=
     cap``), keeping the check a full value oracle."""
-    d = load_table(spark, sf_dir, "documents")
-    wdf = exploded_word_hashes(d).filter(F.size("wh") >= 5)
-    docs = wdf.select(
-        "doc_id",
-        F.explode(F.array(F.array_distinct(shingle_hashes_col("wh")))).alias("sh"),
-    ).select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
-    postings = (
-        docs.groupBy("shingle")
-        .agg(F.collect_list(F.struct("doc_id", "n_sh")).alias("ps"))
-        # the df cap: hot posting lists never reach the expansion
-        .filter(
-            (F.size("ps") > 1) & (F.size("ps") <= F.lit(_JACCARD_DF_CAP))
-        )
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda a, i: F.transform(
-                F.slice(
-                    F.col("ps"), i + 2, F.greatest(F.size("ps") - i - 1, F.lit(0))
-                ),
-                lambda b: F.struct(
-                    F.least(a["doc_id"], b["doc_id"]).alias("doc_a"),
-                    F.greatest(a["doc_id"], b["doc_id"]).alias("doc_b"),
-                    F.when(a["doc_id"] < b["doc_id"], a["n_sh"])
-                    .otherwise(b["n_sh"])
-                    .alias("n_a"),
-                    F.when(a["doc_id"] < b["doc_id"], b["n_sh"])
-                    .otherwise(a["n_sh"])
-                    .alias("n_b"),
-                ),
-            ),
-        )
-    )
-    pairs = (
-        postings.select(F.explode(pair_structs).alias("p"))
-        .groupBy(
-            F.col("p.doc_a").alias("doc_a"),
-            F.col("p.doc_b").alias("doc_b"),
-            F.col("p.n_a").alias("n_a"),
-            F.col("p.n_b").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    # the df cap: hot posting lists never reach the expansion
+    pairs = _shingle_overlap_pairs(
+        _doc_shingles(load_table(spark, sf_dir, "documents")),
+        max_df=_JACCARD_DF_CAP,
     )
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     return pairs.select(

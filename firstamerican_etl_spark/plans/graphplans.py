@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from firstamerican_etl_spark.operators.relational import array_pairs
 from firstamerican_etl_spark.operators.scale import write_bucketed
 from firstamerican_etl_spark.plans.registry import register
 from firstamerican_etl_spark.sources.io import load_table
@@ -265,16 +266,8 @@ def _coshipment_backbone(
     per_order = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_list("l_suppkey")).alias("sups")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("sups"),
-            lambda a, i: F.transform(
-                F.slice(
-                    F.col("sups"), i + 2, F.greatest(F.size("sups") - i - 1, F.lit(0))
-                ),
-                lambda b: F.struct(a.alias("u"), b.alias("v")),
-            ),
-        )
+    pair_structs = array_pairs(
+        F.col("sups"), lambda a, b: F.struct(a.alias("u"), b.alias("v"))
     )
     weights = (
         per_order.select(F.explode(pair_structs).alias("p"))

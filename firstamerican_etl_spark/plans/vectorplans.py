@@ -45,6 +45,36 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _nearest_cell(e: DataFrame, k: int) -> DataFrame:
+    """``e``'s columns plus ``cell``: the nearest-L2 of ``k``
+    deterministic coarse centroids (the vectors ``vec_id < k``; ``e``
+    carries ``vec_id`` and the double vector ``v``). Distances are
+    rounded to 4 places before comparison and ties go to the lowest
+    ``cent_id``, so the argmin is engine-stable; the oracles order by
+    ``round(list_distance, 4), cent_id`` the same way. One broadcast
+    cross join against k rows plus a top-1 window per vector."""
+    cents = e.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
+    )
+    l2 = F.round(
+        F.sqrt(
+            F.aggregate(
+                F.zip_with(F.col("v"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+        ),
+        4,
+    )
+    return top_k_per_group(
+        e.crossJoin(F.broadcast(cents)).select(*e.columns, "cent_id", l2.alias("d")),
+        partition_by=["vec_id"],
+        order_by=[F.col("d"), F.col("cent_id")],
+        k=1,
+        rank_col="__rn",
+    ).select(*e.columns, F.col("cent_id").alias("cell"))
+
+
 @register(
     "embedding_norms",
     oracle="""
@@ -300,26 +330,7 @@ def knn_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
-    )
-    l2 = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("v"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        4,
-    )
-    assigned = top_k_per_group(
-        e.crossJoin(F.broadcast(cents)).withColumn("dist", l2),
-        partition_by=["vec_id"],
-        order_by=[F.col("dist"), F.col("cent_id")],
-        k=1,
-        rank_col="__rn",
-    ).select("vec_id", F.col("cent_id").alias("cell"), "v")
+    assigned = _nearest_cell(e, 8).select("vec_id", "cell", "v")
 
     probes = assigned.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 18)).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pvec"), "cell"
@@ -610,19 +621,6 @@ def knn_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
-    )
-    l2 = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("v"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        4,
-    )
     # localCheckpoint (r14): FOUR consumers read this frame (probes,
     # the IVF candidate join's both-use, and the exact brute-force
     # side) and Catalyst replans the crossJoin+top-1-window subtree
@@ -631,17 +629,7 @@ def knn_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One materialization serves all branches (9→5 Exchanges). At
     # production scale the assignment is STAGED (ann_build writes it
     # cell-partitioned); this is the in-query analogue.
-    assigned = top_k_per_group(
-        e.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "v", "cent_id", l2.alias("d")
-        ),
-        partition_by=["vec_id"],
-        order_by=[F.col("d"), F.col("cent_id")],
-        k=1,
-        rank_col="__rn",
-    ).select(
-        "vec_id", "v", F.col("cent_id").alias("cell")
-    ).localCheckpoint(eager=True)
+    assigned = _nearest_cell(e, 8).localCheckpoint(eager=True)
     probes = assigned.filter(
         (F.col("vec_id") >= 8) & (F.col("vec_id") < 18)
     ).select(
@@ -949,8 +937,8 @@ FROM dims GROUP BY 1, 2
 def kmeans_lloyd_step_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd iteration, fully value-oracled (the k-means companion
     to the hashing verification twins): assign every vector to its
-    nearest of 8 fixed coarse centroids (the ``knn_ivf_cells``
-    assignment, rounded-distance + id tie-break), then recompute each
+    nearest of 8 fixed coarse centroids (``_nearest_cell``, as in
+    ``knn_ivf_cells``: rounded distance + id tie-break), then recompute each
     cell's centroid as the per-dimension MEAN on the quantized-int64
     grid — sums of exact integers divided by exact counts, so the new
     centroids are bit-identical to DuckDB under any partitioning (a
@@ -962,33 +950,10 @@ def kmeans_lloyd_step_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: assignment is a broadcast cross join vs k centroids;
     the update is one (cell, dim)-keyed aggregate — k·d output rows,
     map-side combined, corpus shuffled once."""
-    from firstamerican_etl_spark.operators.relational import top_k_per_group
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
-    )
-    l2 = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("v"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        4,
-    )
-    assigned = top_k_per_group(
-        e.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "v", "cent_id", l2.alias("d")
-        ),
-        partition_by=["vec_id"],
-        order_by=[F.col("d"), F.col("cent_id")],
-        k=1,
-        rank_col="__rn",
-    ).select("v", F.col("cent_id").alias("cell"))
+    assigned = _nearest_cell(e, 8).select("v", "cell")
     dims = assigned.select(
         "cell",
         F.posexplode(
@@ -1080,10 +1045,10 @@ def _semdedup(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     Overflow-safe under ANSI: |x|≤0.578 ⇒ dot ≤ 64·578² ≈ 2.1e7,
     25·dot² ≈ 1.1e16 < 2⁶³.
 
-    Scale shape: assignment is a broadcast cross join vs K centroids +
-    top-1 (the IVF pattern); the pairing join keys on cell, so each
-    vector moves ONCE into its cell bucket and candidate pairs are
-    Σ|cell|² — bound K to keep cells task-sized (production: k-means
+    Scale shape: assignment is ``_nearest_cell`` (broadcast cross join
+    vs K centroids + top-1, the IVF pattern); the pairing join keys on
+    cell, so each vector moves ONCE into its cell bucket and candidate
+    pairs are Σ|cell|² — bound K to keep cells task-sized (production: k-means
     with √N cells, same plan). The dup report re-joins doc-keyed."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1093,19 +1058,6 @@ def _semdedup(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("long"),
         ).alias("q"),
     )
-    cents = e.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
-    )
-    l2 = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("v"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        4,
-    )
     from firstamerican_etl_spark.operators.scale import stage_once
 
     # Stage the assignment once: three join branches (both pair sides +
@@ -1113,19 +1065,7 @@ def _semdedup(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     # centroid cross join + window per branch. Staging is also the real
     # IVF build artifact — assign once, search many.
     assigned = stage_once(
-        top_k_per_group(
-            e.crossJoin(F.broadcast(cents)).select(
-                "vec_id", "q", "cent_id", l2.alias("d")
-            ),
-            partition_by=["vec_id"],
-            order_by=[F.col("d"), F.col("cent_id")],
-            k=1,
-            rank_col="__rn",
-        ).select(
-            "vec_id",
-            F.col("cent_id").alias("cell"),
-            "q",
-        ),
+        _nearest_cell(e, k).select("vec_id", "cell", "q"),
         "semdedup_assigned",
         reuse_key=f"{staging_tag(sf_dir, 'embeddings')}_{k}",
     )
@@ -1323,29 +1263,8 @@ def semdedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = e.count()  # metadata scalar
     k_cells = max(_SEMDEDUP_K, _math.isqrt(n) // 2)
-    cents = e.filter(F.col("vec_id") < k_cells).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
-    )
-    l2 = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("v"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        4,
-    )
     assigned = stage_once(
-        top_k_per_group(
-            e.crossJoin(F.broadcast(cents)).select(
-                "vec_id", "q", "cent_id", l2.alias("d")
-            ),
-            partition_by=["vec_id"],
-            order_by=[F.col("d"), F.col("cent_id")],
-            k=1,
-            rank_col="__rn",
-        ).select("vec_id", F.col("cent_id").alias("cell"), "q"),
+        _nearest_cell(e, k_cells).select("vec_id", "cell", "q"),
         "semdedup_assigned",
         reuse_key=f"{staging_tag(sf_dir, 'embeddings')}_{k_cells}",
     )

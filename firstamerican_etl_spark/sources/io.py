@@ -328,28 +328,6 @@ def extract_zips(zip_paths: list[str], out_dir: str) -> list[str]:
         return list(pool.map(_extract, jobs))
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    compression: str = "zstd",
-) -> None:
-    """ORC sink (columnar alternative to parquet; built into Spark).
-    Useful when downstream consumers are Hive/Trino-first — same
-    partitioning and pruning semantics as the parquet sink."""
-    writer = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — predicate pushdown and column pruning work the same
-    as parquet (both are stripe/stats-indexed columnar formats)."""
-    return spark.read.orc(path)
-
-
 def write_range_clustered(
     df: DataFrame,
     path: str,
@@ -377,79 +355,6 @@ def write_range_clustered(
     )
     (
         parted.sortWithinPartitions(*cluster_by)
-        .write.mode(mode)
-        .option("compression", compression)
-        .parquet(path)
-    )
-
-
-def _morton_interleave(a, b):
-    """Morton (Z-order) code of two 16-bit-quantized columns: spread
-    each value's bits to even positions ("Part1By1" bit tricks — five
-    shift/mask rounds, pure codegen'd long arithmetic), then OR them
-    offset by one. Locality property: nearby (a, b) points get nearby
-    z-values, so range-partitioning on z keeps BOTH dimensions compact
-    per file."""
-    def part1by1(x):
-        x = x.bitwiseAND(F.lit(0x0000FFFF))
-        x = (x.bitwiseOR(F.shiftleft(x, 8))).bitwiseAND(F.lit(0x00FF00FF))
-        x = (x.bitwiseOR(F.shiftleft(x, 4))).bitwiseAND(F.lit(0x0F0F0F0F))
-        x = (x.bitwiseOR(F.shiftleft(x, 2))).bitwiseAND(F.lit(0x33333333))
-        x = (x.bitwiseOR(F.shiftleft(x, 1))).bitwiseAND(F.lit(0x55555555))
-        return x
-
-    return part1by1(a).bitwiseOR(F.shiftleft(part1by1(b), 1))
-
-
-def write_zorder_clustered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    num_files: int = 32,
-    mode: str = "overwrite",
-    compression: str = "snappy",
-) -> None:
-    """Z-order-clustered parquet layout over TWO numeric columns:
-    quantize each to 16 bits against its [min, max] (one tiny 2-row
-    aggregate, collected driver-side), interleave into a Morton code,
-    then range-partition + sort on the code. Each output file then
-    covers a small rectangle in (a, b) space, so parquet min/max
-    footers file-skip selective scans on EITHER column — the
-    multi-dimension upgrade of ``write_range_clustered``, which keeps
-    only its single sort key compact (filters on a second column scan
-    every file). This is what "OPTIMIZE ZORDER BY" does in lakehouse
-    table formats, expressed as a plain layout write."""
-    bounds = df.agg(
-        F.min(col_a).alias("a_lo"),
-        F.max(col_a).alias("a_hi"),
-        F.min(col_b).alias("b_lo"),
-        F.max(col_b).alias("b_hi"),
-    ).collect()[0]
-    if bounds["a_lo"] is None or bounds["b_lo"] is None:
-        # empty input (or an all-null cluster column): there is nothing
-        # to cluster — write the empty/degenerate dataset instead of
-        # float(None) exploding (r10 review; write_range_clustered
-        # already tolerates this input)
-        df.write.mode(mode).option("compression", compression).parquet(path)
-        return
-    a_lo, a_hi = float(bounds["a_lo"]), float(bounds["a_hi"])
-    b_lo, b_hi = float(bounds["b_lo"]), float(bounds["b_hi"])
-
-    def quant(c, lo, hi):
-        span = (hi - lo) or 1.0
-        return F.floor(
-            (c.cast("double") - F.lit(lo)) / F.lit(span) * F.lit(65535.0)
-        ).cast("long")
-
-    z = _morton_interleave(
-        quant(F.col(col_a), a_lo, a_hi), quant(F.col(col_b), b_lo, b_hi)
-    )
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
         .write.mode(mode)
         .option("compression", compression)
         .parquet(path)

@@ -16,7 +16,7 @@ from __future__ import annotations
 import pytest
 
 from firstamerican_etl_spark.plans.registry import load_all
-from firstamerican_etl_spark.sources.io import load_table
+from firstamerican_etl_spark.sources.io import TABLES, load_table
 
 REGISTRY = load_all()
 
@@ -25,10 +25,7 @@ REGISTRY = load_all()
 def empty_dir(spark, sf_dir, tmp_path_factory) -> str:
     """All contract tables with their real schemas and zero rows."""
     root = tmp_path_factory.mktemp("empty_sf")
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
+    for t in TABLES:
         src = load_table(spark, sf_dir, t)
         src.limit(0).write.parquet(str(root / f"{t}.parquet"))
     return str(root)

@@ -342,18 +342,6 @@ def test_unify_merge_plans_shuffled_hash_joins(spark, fa_dirs):
     assert "ShuffledHashJoin" not in plan_off, plan_off
 
 
-def test_dq_leading_zero_ids(spark):
-    """The promoted fa-etl.py:68 check: '007' (cast-lossy) and 'abc'
-    (non-numeric) are flagged; '7', ' 7 ' (trim-clean), and null are
-    not."""
-    from firstamerican_etl_spark.pipeline.convert import dq_leading_zero_ids
-
-    raw = spark.createDataFrame(
-        [("007",), ("7",), (" 7 ",), ("abc",), (None,)], "PropertyID: string"
-    )
-    assert dq_leading_zero_ids(raw) == 2
-
-
 def test_cli_main_end_to_end(spark, tmp_path_factory):
     """O1 CLI contract: main(argv) parses the reference's four flags,
     runs the pipeline, writes the log file, and produces the merged

@@ -599,3 +599,65 @@ def test_concurrent_actions_raises_after_every_action_finishes():
     with pytest.raises(ValueError, match="first failure"):
         concurrent_actions(fail, slow, fail_later)
     assert slow_done.is_set()
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 5])
+def test_array_pairs_yields_every_i_lt_j_pair_in_index_order(spark, n):
+    from firstamerican_etl_spark.operators.relational import array_pairs
+
+    # descending values, so value order and index order disagree
+    vals = list(range(n, 0, -1))
+    pairs = array_pairs(
+        F.col("arr"), lambda a, b: F.struct(a.alias("a"), b.alias("b"))
+    )
+    row = (
+        spark.createDataFrame([(vals,)], "arr array<int>")
+        .select(pairs.alias("p"))
+        .collect()[0]
+    )
+    want = [(vals[i], vals[j]) for i in range(n) for j in range(i + 1, n)]
+    assert [(p["a"], p["b"]) for p in row["p"]] == want
+
+
+def test_bucket_pairs_switches_from_clique_to_star_past_the_cap(spark):
+    from firstamerican_etl_spark.plans.dedupplans import _CLIQUE_CAP, _bucket_pairs
+
+    cap = _CLIQUE_CAP
+    df = spark.createDataFrame(
+        [(list(range(1, cap + 1)),), (list(range(1, cap + 2)),)], "ids array<int>"
+    )
+    pairs = _bucket_pairs(
+        F.col("ids"),
+        lambda a, b, star: F.struct(
+            a.alias("doc_a"), b.alias("doc_b"), F.lit(star).alias("star")
+        ),
+    )
+    clique, star = [
+        [tuple(p) for p in r["p"]]
+        for r in df.select(F.size("ids").alias("n"), pairs.alias("p"))
+        .orderBy("n")
+        .collect()
+    ]
+    assert len(clique) == cap * (cap - 1) // 2
+    assert clique == [
+        (i, j, False) for i in range(1, cap + 1) for j in range(i + 1, cap + 1)
+    ]
+    assert star == [(1, j, True) for j in range(2, cap + 2)]
+
+
+def test_shingle_overlap_pairs_max_df_drops_hot_shingles(spark):
+    from firstamerican_etl_spark.plans.dedupplans import _shingle_overlap_pairs
+
+    # shingle 10 is in three docs (df 3), shingle 20 in two (df 2)
+    shingles = spark.createDataFrame(
+        [(1, 2, 10), (2, 2, 10), (3, 1, 10), (1, 2, 20), (2, 2, 20)],
+        "doc_id bigint, n_sh int, shingle bigint",
+    )
+
+    def rows(max_df):
+        return sorted(
+            tuple(r) for r in _shingle_overlap_pairs(shingles, max_df=max_df).collect()
+        )
+
+    assert rows(None) == [(1, 2, 2, 2, 2), (1, 3, 2, 1, 1), (2, 3, 2, 1, 1)]
+    assert rows(2) == [(1, 2, 2, 2, 1)]

@@ -190,3 +190,81 @@ def test_thread_pools_only_in_sanctioned_places():
         ("sources/io.py", "extract_zips"),
         ("pipeline/corpus_build.py", "build_corpus_delta"),
     }
+
+
+def _package_functions():
+    """(relative path, innermost function name, whitespace-free source)
+    for every function in the package."""
+    import ast
+    import glob as _glob
+    import os as _os
+
+    root = _os.path.join(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+        "firstamerican_etl_spark",
+    )
+    out = []
+    for path in _glob.glob(_os.path.join(root, "**", "*.py"), recursive=True):
+        rel = _os.path.relpath(path, root).replace(_os.sep, "/")
+        src = open(path).read()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                seg = "".join(ast.get_source_segment(src, node).split())
+                out.append((rel, node.name, seg))
+    return out
+
+
+def test_pair_expansion_and_cell_assignment_have_one_copy():
+    """The in-array i<j pair expansion and the nearest-centroid cross
+    join each live in one helper (operators/relational.array_pairs,
+    vectorplans._nearest_cell); a query needing either calls the helper
+    instead of pasting the expression."""
+    funcs = _package_functions()
+    for idiom, home in [
+        ("i+2,F.greatest(F.size(", ("operators/relational.py", "array_pairs")),
+        ("crossJoin(F.broadcast(cents))", ("plans/vectorplans.py", "_nearest_cell")),
+    ]:
+        holders = [(rel, name, seg) for rel, name, seg in funcs if idiom in seg]
+        # innermost holders: an enclosing function holds its nested
+        # function's source too
+        innermost = {
+            (rel, name)
+            for rel, name, seg in holders
+            if not any(s2 != seg and s2 in seg for _, _, s2 in holders)
+        }
+        assert innermost == {home}, (idiom, sorted(innermost))
+
+
+def test_ann_index_reads_declare_their_schema():
+    """Every parquet read in pipeline/ann_build.py passes .schema(...):
+    an undeclared read pays a footer-inference job per call."""
+    import ast
+    import os as _os
+
+    path = _os.path.join(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+        "firstamerican_etl_spark",
+        "pipeline",
+        "ann_build.py",
+    )
+
+    def chain(node):
+        names = []
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Call):
+                node = node.func
+            else:
+                names.append(node.attr)
+                node = node.value
+        return names
+
+    reads = []
+    for node in ast.walk(ast.parse(open(path).read())):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and "read" in chain(node)
+        ):
+            reads.append((node.lineno, "schema" in chain(node)))
+    assert reads and all(ok for _, ok in reads), [ln for ln, ok in reads if not ok]

@@ -1,7 +1,8 @@
 """Source/sink round-trip contracts: a table written through each
 supported sink and read back must be value-identical and keep its
-schema. Covers orc (write_orc/read_orc), csv (read_csv with explicit
-schema), and partitioned parquet re-read."""
+schema. Covers csv (read_csv with explicit schema) and partitioned
+parquet re-read; the ORC round trip is the registered query
+``orc_source_roundtrip``."""
 
 from __future__ import annotations
 
@@ -11,32 +12,12 @@ from pyspark.sql import functions as F
 from firstamerican_etl_spark.sources.io import (
     load_table,
     read_csv,
-    read_orc,
-    write_orc,
     write_parquet,
 )
 
 
 def _sorted_rows(df, key):
     return [tuple(r) for r in df.orderBy(key).collect()]
-
-
-def test_orc_roundtrip(spark, sf_dir, tmp_path):
-    o = load_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_orc")
-    write_orc(o, path)
-    back = read_orc(spark, path)
-    assert back.schema == o.schema
-    assert _sorted_rows(back, "n_nationkey") == _sorted_rows(o, "n_nationkey")
-
-
-def test_orc_predicate_pushdown(spark, sf_dir, tmp_path):
-    o = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_orc")
-    write_orc(o, path)
-    q = read_orc(spark, path).filter(F.col("o_orderkey") == 5)
-    plan = q._sc._jvm.PythonSQLUtils.explainString(q._jdf.queryExecution(), "formatted")
-    assert "PushedFilters: [" in plan and "o_orderkey" in plan.split("PushedFilters")[1][:200]
 
 
 def test_csv_roundtrip_pipe_delimited(spark, sf_dir, tmp_path):
@@ -169,45 +150,6 @@ def test_jsonlgz_writer_roundtrip(spark, sf_dir, tmp_path):
     a = src.exceptAll(back).count()
     b = back.exceptAll(src).count()
     assert a == 0 and b == 0
-
-
-def test_zorder_layout_compacts_both_dimensions(spark, sf_dir, tmp_path):
-    """Z-order clustering must make per-file value spans narrow on
-    BOTH interleaved columns (that is the file-skipping contract for
-    2-D selective scans), where 1-D range clustering keeps only its
-    sort key compact — the second column's per-file span stays ~the
-    full domain."""
-    from pyspark.sql import functions as F
-
-    from firstamerican_etl_spark.sources.io import (
-        write_range_clustered,
-        write_zorder_clustered,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-
-    def file_span_ratio(path, col):
-        df = spark.read.parquet(path).withColumn("f", F.input_file_name())
-        spans = df.groupBy("f").agg(
-            (F.max(col) - F.min(col)).alias("span")
-        )
-        g = df.agg((F.max(col) - F.min(col)).alias("g")).collect()[0]["g"]
-        avg = spans.agg(F.avg("span")).collect()[0][0]
-        return avg / g
-
-    zpath = str(tmp_path / "zorder")
-    write_zorder_clustered(li, zpath, "l_orderkey", "l_partkey", num_files=16)
-    rpath = str(tmp_path / "range1d")
-    write_range_clustered(li, rpath, ["l_orderkey"], num_files=16)
-
-    # 1-D clustering: sort key compact, second column ~full span
-    assert file_span_ratio(rpath, "l_orderkey") < 0.2
-    assert file_span_ratio(rpath, "l_partkey") > 0.8
-    # Z-order: BOTH columns well below full span per file
-    assert file_span_ratio(zpath, "l_orderkey") < 0.5
-    assert file_span_ratio(zpath, "l_partkey") < 0.5
-    # and content is preserved
-    assert spark.read.parquet(zpath).count() == li.count()
 
 
 def test_wds_tar_shard_roundtrip(spark, tmp_path):
@@ -456,18 +398,6 @@ def test_custom_sink_append_merges_manifest(spark, tmp_path):
         .load()
     )
     assert back.count() == 6
-
-
-def test_zorder_empty_input_writes_empty_dataset(spark, tmp_path):
-    """r10 review: float(None) crash on empty input — the z-order
-    writer must degrade to a plain empty write like its range-clustered
-    sibling."""
-    from firstamerican_etl_spark.sources.io import write_zorder_clustered
-
-    out = str(tmp_path / "z_empty")
-    empty = spark.range(0).selectExpr("id AS a", "id AS b")
-    write_zorder_clustered(empty, out, "a", "b")
-    assert spark.read.parquet(out).count() == 0
 
 
 def test_compact_parquet_dir_merges_appended_schema(spark, tmp_path):

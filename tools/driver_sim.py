@@ -49,9 +49,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as E
 from firstamerican_etl_spark.session import get_spark
+from firstamerican_etl_spark.sources.io import TABLES
 
 SF = "/root/testdata/sf0.01"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def fetch_oracle(con, sql):

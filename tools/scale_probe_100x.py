@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from firstamerican_etl_spark.plans.registry import load_all
 from firstamerican_etl_spark.session import get_spark
-from firstamerican_etl_spark.sources.io import staging_tag
+from firstamerican_etl_spark.sources.io import TABLES, staging_tag
 from tools.scale_probe_10x import SCALED, _SHIFT, build_sf1
 
 SRC = "/root/testdata/sf0.1"
@@ -130,11 +130,7 @@ def build_sf10(spark) -> str:
         return out
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
-    tables = (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split()
-    for t in tables:
+    for t in TABLES:
         src = spark.read.parquet(os.path.join(SRC, f"{t}.parquet"))
         if t not in SCALED:
             src.write.mode("overwrite").parquet(os.path.join(out, f"{t}.parquet"))

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from firstamerican_etl_spark.plans.registry import load_all
 from firstamerican_etl_spark.session import get_spark
-from firstamerican_etl_spark.sources.io import staging_tag
+from firstamerican_etl_spark.sources.io import TABLES, staging_tag
 
 SRC = "/root/testdata/sf0.1"
 COPIES = 10
@@ -189,11 +189,7 @@ def build_sf1(spark) -> str:
         return out
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
-    tables = (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split()
-    for t in tables:
+    for t in TABLES:
         src = spark.read.parquet(os.path.join(SRC, f"{t}.parquet"))
         if t in SCALED:
             cols = [c for c in SCALED[t] if c in src.columns]
@@ -295,11 +291,7 @@ def build_points_scaled(spark, sf1: str, copies: int) -> str:
             big = big.unionByName(p)
         big.write.mode(writer_mode).parquet(os.path.join(out, "customer.parquet"))
         writer_mode = "append"
-    tables = (
-        "region nation supplier part orders lineitem "
-        "events documents embeddings"
-    ).split()
-    for t in tables:
+    for t in [t for t in TABLES if t != "customer"]:
         os.symlink(
             os.path.join(sf1, f"{t}.parquet"), os.path.join(out, f"{t}.parquet")
         )
