@@ -30,6 +30,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from firstamerican_etl_spark.sources.io import publish_file
+
 _SALT = "__salt"
 
 _STAGE_DIRS: dict[str, str] = {}
@@ -194,7 +196,7 @@ def stage_bucketed_tables(
       half-staged state a single-table check would trust);
     - restage = DROP every table, clear the stage root, run each
       ``write(path)`` into ``stage_root/<table>``;
-    - the tag is published atomically (tmp + os.replace) AFTER the
+    - the tag is published with ``sources/io.publish_file`` AFTER the
       writes, together with ``meta_fn()``'s output — a content-derived
       scalar (pagerank caches |nodes| this way) that the reuse path
       returns without recomputing. A torn/absent tag reads as "not
@@ -232,12 +234,7 @@ def stage_bucketed_tables(
         for t, write in tables:
             write(os.path.join(stage_root, t))
         meta = str(meta_fn()) if meta_fn else ""
-        tmp = tag_file + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(f"{reuse_key} {meta}")
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, tag_file)
+        publish_file(tag_file, f"{reuse_key} {meta}")
     return meta
 
 

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from firstamerican_etl_spark.operators.scale import concurrent_actions
-from firstamerican_etl_spark.sources.io import load_table, local_df
+from firstamerican_etl_spark.sources.io import load_table, local_df, replace_dir
 
 _DIM = 64
 #: on-disk schemas of the two index tables; explicit schemas on every
@@ -468,19 +468,15 @@ def refresh_ann_index(
     recommends; after it, appended_frac is 0 by construction and cell
     sizes re-balance around the drifted mass.
 
-    Generation protocol: train into a sibling ``.gen-*`` dir, then
-    swap via two renames (old index parked at ``.old`` until the new
-    one is in place, then removed). The swap window is two directory
-    renames; this is a MAINTENANCE operation — pause serving for it,
-    same as any FAISS retrain. Writing the new generation never reads
-    and overwrites the same files (the read-own-input hazard), because
-    training reads the OLD dir and writes the sibling."""
-    import shutil
-    import uuid
-
-    # a trailing slash would nest the sibling generation INSIDE the
-    # live index ("x/.gen-..." under "x/") and break the swap renames
-    out_dir = os.path.normpath(out_dir)
+    Generation protocol: ``sources/io.replace_dir`` trains into a
+    sibling ``.gen-*`` dir, parks the live index at ``.old-*``,
+    promotes the new generation and drops the parked copy; a failed
+    retrain or promotion leaves the live index in place. The swap
+    window is two directory renames; this is a MAINTENANCE operation
+    — pause serving for it, same as any FAISS retrain. Writing the new
+    generation never reads and overwrites the same files (the
+    read-own-input hazard), because training reads the OLD dir and
+    writes the sibling."""
     assign_path = os.path.join(out_dir, "assignments.parquet")
     meta_path = os.path.join(out_dir, "train_meta.parquet")
     if not os.path.exists(os.path.join(assign_path, "_SUCCESS")):
@@ -503,54 +499,9 @@ def refresh_ann_index(
         .parquet(assign_path)
         .select("vec_id", "v")
     )
-    gen = f"{out_dir}.gen-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    try:
-        stats = _train_index(spark, emb, gen, n_cells, lloyd_rounds)
-    except BaseException:
-        # a failed retrain (OOM, disk full, interrupt) must not leak an
-        # index-sized partial generation next to the live index; the
-        # live index itself is untouched at this point
-        shutil.rmtree(gen, ignore_errors=True)
-        raise
-    # Swap: park the live index, promote the new generation, drop the
-    # parked copy. If parking succeeded but promotion did NOT, restore
-    # the parked live index — and only ever delete `gen` once a
-    # complete index is back at out_dir. The earlier unconditional
-    # finally-rmtree(gen) could destroy the ONLY complete generation
-    # when an interrupt landed between the two renames (r10 review,
-    # sixth pass), leaving nothing at out_dir.
-    old = f"{out_dir}.old-{uuid.uuid4().hex[:8]}"
-    try:
-        os.rename(out_dir, old)
-        os.rename(gen, out_dir)
-    finally:
-        # Both renames are inside the protected region (r10 review,
-        # seventh/eighth passes): a failure or interrupt at EITHER
-        # must leave a complete index at out_dir and no index-sized
-        # leak. Progress is read from the FILESYSTEM, never a flag —
-        # a flag assignment after a rename leaves a bytecode window
-        # where an interrupt strands state the finally then misreads.
-        # rename(gen, out_dir) is the only way `gen` vanishes, so:
-        if not os.path.isdir(gen):
-            # promoted (exceptionally or not): the new index is live;
-            # the parked copy is the only thing left to retire
-            shutil.rmtree(old, ignore_errors=True)
-        elif os.path.isdir(old):
-            # parked but not promoted: restore the live index, and
-            # only delete the generation once restoration succeeded
-            try:
-                os.rename(old, out_dir)
-            except OSError:
-                # restoration itself failed: leave BOTH survivors
-                # (old + gen) on disk for manual recovery — deleting
-                # either could drop the last complete index
-                pass
-            else:
-                shutil.rmtree(gen, ignore_errors=True)
-        else:
-            # parking never happened: out_dir is untouched; the
-            # trained generation is the only thing to clean
-            shutil.rmtree(gen, ignore_errors=True)
+    stats = replace_dir(
+        out_dir, lambda gen: _train_index(spark, emb, gen, n_cells, lloyd_rounds)
+    )
     return AnnIndexStats(
         n_vectors=stats.n_vectors,
         n_cells=stats.n_cells,

@@ -55,6 +55,7 @@ from firstamerican_etl_spark.plans.dedupplans import (
     minhash_bands,
     minhash_lsh_pairs_from_bands,
 )
+from firstamerican_etl_spark.sources.io import replace_dir
 
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _URL_RE = r"https?://[^\s]+"
@@ -749,9 +750,11 @@ def compact_corpus(
        minimum. In rebuild semantics written docs are exactly the
        component minima, so any written non-minimum IS a divergence —
        recorded or not.
-    3. The surviving corpus is rewritten through a temp directory and
-       atomically swapped in (the ``_index`` sidecar is carried
-       across); the bridged-components record is cleared.
+    3. The surviving corpus is rewritten as a new generation and
+       swapped in with ``sources/io.replace_dir`` (the ``_index``
+       sidecar is copied across); a failed rewrite or promotion leaves
+       the live corpus in place. The bridged-components record is
+       cleared after the swap.
 
     Doc SETS after compaction equal a from-scratch rebuild's exactly
     (bin_ids/splits of surviving rows are untouched — packing is the
@@ -769,10 +772,6 @@ def compact_corpus(
     (usually tiny) drop list and a partitioned write. Nothing reads
     corpus text."""
     import shutil
-
-    from firstamerican_etl_spark.plans.dedupplans import (
-        minhash_lsh_pairs_from_bands,
-    )
 
     idx = _index_dir(out_dir)
     bridged_path = os.path.join(idx, "bridged_components")
@@ -795,30 +794,24 @@ def compact_corpus(
     kept = existing.join(drop, "doc_id", "left_anti").observe(
         obs, F.count(F.lit(1)).alias("n")
     )
-    tmp = out_dir.rstrip("/") + ".compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    kept.select(*existing.columns).write.mode("overwrite").partitionBy(
-        "split"
-    ).parquet(tmp)
     n_before = existing.count()
+
+    def _write(gen: str) -> None:
+        kept.select(*existing.columns).write.partitionBy("split").parquet(gen)
+        # the index sidecar (inside out_dir, _-prefixed) rides across.
+        # COPY it rather than move it: a crash between a move and the
+        # swap would leave the LIVE corpus without its index —
+        # unreadable by delta's scheme check and not re-runnable; a copy
+        # leaves the old generation complete until the swap lands, at
+        # the cost of duplicating a narrow 2-3-column sidecar.
+        shutil.copytree(
+            os.path.join(out_dir, "_index"), os.path.join(gen, "_index")
+        )
+
+    replace_dir(out_dir, _write)
     n_removed = n_before - int(obs.get["n"])
-    # atomic-ish swap: the index sidecar (inside out_dir, _-prefixed)
-    # rides across; the bridged record is cleared LAST so a crash
-    # before this point leaves a re-runnable state, never a corrupt
-    # one. COPY the index into the new generation rather than move it
-    # (r10 review): a crash between a move and the rename below would
-    # leave the LIVE corpus without its index — unreadable by delta's
-    # scheme check and not re-runnable; a copy leaves the old
-    # generation complete until the rename lands, at the cost of
-    # duplicating a narrow 2-3-column sidecar for the swap window.
-    shutil.copytree(
-        os.path.join(out_dir, "_index"), os.path.join(tmp, "_index")
-    )
-    old = out_dir.rstrip("/") + ".compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(out_dir, old)
-    os.rename(tmp, out_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    # the bridged record is cleared LAST, so a crash before this point
+    # leaves a re-runnable state, never a corrupt one
     shutil.rmtree(
         os.path.join(_index_dir(out_dir), "bridged_components"),
         ignore_errors=True,  # force=True may run with nothing recorded

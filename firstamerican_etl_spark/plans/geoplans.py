@@ -21,10 +21,10 @@ Scale notes:
   the candidate set; the exact metric runs only on candidates. The
   oracle replicates the grid semantics, so parity is exact by
   construction.
-- Morton codes linearize 2-D locality into one integer: range-cluster
-  the staged layout by it (write_range_clustered) and parquet min/max
-  footers prune 2-D bbox queries from a 1-D sort — the standard
-  spatial layout trick at 100 TB. The unrolled bit-interleave is pure
+- Morton codes linearize 2-D locality into one integer: a layout
+  range-clustered by it (repartitionByRange + sortWithinPartitions)
+  lets parquet min/max footers prune 2-D bbox queries from a 1-D sort
+  — the standard spatial layout trick at 100 TB. The unrolled bit-interleave is pure
   integer ops, fully codegen'd, identical in every engine.
 
 Trig note: sin/cos/asin may differ in the last ulp between JVM and C
@@ -294,11 +294,11 @@ ORDER BY 1
 )
 def geo_morton_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout bucketing: 8-bit lat/lon bins interleaved into a
-    16-bit Morton code, aggregated per 64-code block. Range-clustering
-    the staged layout by this code (``write_range_clustered``) gives
-    parquet footers whose min/max bound BOTH dimensions at once, so a
-    2-D bbox scan prunes files from a 1-D sort — the spatial layout
-    recipe at 100 TB. The interleave is unrolled integer ops (no UDF),
+    16-bit Morton code, aggregated per 64-code block. A layout
+    range-clustered by this code (repartitionByRange +
+    sortWithinPartitions) gives parquet footers whose min/max bound
+    BOTH dimensions at once, so a 2-D bbox scan prunes files from a
+    1-D sort — the spatial layout recipe at 100 TB. The interleave is unrolled integer ops (no UDF),
     and the aggregate doubles as the layout-quality report (points per
     Z-block, code span per block)."""
     clamp = lambda c: F.least(c, F.lit(255))  # noqa: E731 — edge bin (lat=+90)

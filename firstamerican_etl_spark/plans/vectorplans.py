@@ -143,8 +143,6 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
         )
     )
-    from firstamerican_etl_spark.operators.relational import top_k_per_group
-
     return top_k_per_group(
         sims,
         partition_by=["q_id"],
@@ -203,8 +201,6 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
         )
     )
-    from firstamerican_etl_spark.operators.relational import top_k_per_group
-
     return top_k_per_group(
         sims,
         partition_by=["q_id"],
@@ -616,8 +612,6 @@ def knn_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth is the expensive side (full scan per probe) — run it
     over a fixed probe SAMPLE, as here; the IVF side reuses the
     inverted-file layout. The eval join is |probes|·k rows — metadata."""
-    from firstamerican_etl_spark.operators.relational import top_k_per_group
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -895,8 +889,6 @@ def knn_lsh_bucketed_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
         )
     )
-    from firstamerican_etl_spark.operators.relational import top_k_per_group
-
     return top_k_per_group(
         sims,
         partition_by=["q_id"],

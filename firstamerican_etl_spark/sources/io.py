@@ -21,19 +21,33 @@ Reference behavior re-expressed Spark-first:
   precedence bug at fa-etl.py:323 which we fix, not replicate) →
   ``output_exists`` checks the parquet dir ``_SUCCESS`` marker.
 - S7 rollback: Spark's FileOutputCommitter makes partial task output
-  invisible; ``mode=overwrite`` covers re-runs.
+  invisible; ``mode=overwrite`` covers re-runs. Everything else that
+  changes data on disk commits through one of three protocols here:
+  ``replace_dir`` (swap a live directory for a new generation),
+  ``ManifestShardWriter`` (shard files + a ``_SUCCESS`` manifest) and
+  ``publish_file`` (one small file, durably and atomically).
 - S8 temp-file dataflow: not needed — plans stay lazy end-to-end.
+
+This module imports nothing from the package, so every layer can use
+its commit protocols without an import cycle.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 import zipfile
+from collections.abc import Callable
 from pathlib import Path
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
+
+_R = TypeVar("_R")
 
 #: Canonical test tables (driver-provided, /root/repo/TESTDATA.md).
 TABLES = (
@@ -328,39 +342,6 @@ def extract_zips(zip_paths: list[str], out_dir: str) -> list[str]:
         return list(pool.map(_extract, jobs))
 
 
-def write_range_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    num_files: int | None = None,
-    mode: str = "overwrite",
-    compression: str = "snappy",
-) -> None:
-    """Range-clustered parquet layout: repartitionByRange on the
-    cluster keys + sortWithinPartitions before writing, so each output
-    file covers a narrow, (near-)disjoint key range. Parquet row-group
-    min/max stats then make selective scans skip whole files — the
-    layout-level complement to predicate pushdown, and the standard
-    answer for 100 TB time-series/fact tables queried by key range
-    (coarse Z-ordering for a single clustering dimension).
-
-    Unlike hive partitionBy (one DIRECTORY per value — unusable for
-    high-cardinality keys), range clustering keeps file count fixed
-    and bounded while still enabling pruning on a high-cardinality
-    column."""
-    parted = (
-        df.repartitionByRange(num_files, *cluster_by)
-        if num_files
-        else df.repartitionByRange(*cluster_by)
-    )
-    (
-        parted.sortWithinPartitions(*cluster_by)
-        .write.mode(mode)
-        .option("compression", compression)
-        .parquet(path)
-    )
-
-
 def stage_is_fresh(path: str, input_paths: list[str]) -> bool:
     """Content-aware idempotent-resume guard: a staged output may be
     skipped only if it exists (``_SUCCESS``) AND is at least as new as
@@ -385,6 +366,174 @@ def stage_is_fresh(path: str, input_paths: list[str]) -> bool:
     return True
 
 
+def publish_file(path: str, text: str) -> None:
+    """Durable, atomic publish of one small file: write ``path.tmp``,
+    fsync it, then ``os.replace`` it over ``path``. A crash leaves the
+    old file or the new one, never a torn one (``os.replace`` is atomic
+    on POSIX); a crash before the replace can strand ``path.tmp``."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def replace_dir(path: str, write_fn: Callable[[str], _R]) -> _R:
+    """Swap the live directory ``path`` for a new generation and return
+    ``write_fn``'s result.
+
+    ``write_fn(gen)`` writes the sibling ``<path>.gen-<pid>-<rand>``;
+    it may read the live dir, because nothing overwrites what it reads
+    (the read-own-input hazard). Then the live dir is parked at
+    ``<path>.old-<rand>``, the generation is promoted, and the parked
+    copy is dropped. Readers racing the two renames may find no dir:
+    this is a maintenance swap, not a serving-time one. A failed write
+    drops ``gen`` and leaves ``path`` untouched. A failed promotion
+    restores the parked dir, and ``gen`` is deleted only once that
+    restore succeeded; if the restore fails, both copies stay on disk
+    for manual recovery."""
+    # a trailing slash would nest the generation INSIDE the live dir
+    # ("x/.gen-..." under "x/") and break the swap renames
+    path = os.path.normpath(path)
+    gen = f"{path}.gen-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    try:
+        result = write_fn(gen)
+    except BaseException:
+        # a failed write (OOM, disk full, interrupt) must not leak a
+        # partial generation next to the live dir, which is untouched
+        shutil.rmtree(gen, ignore_errors=True)
+        raise
+    # Never delete `gen` before a complete dir is back at `path`: an
+    # unconditional finally-rmtree(gen) could destroy the ONLY complete
+    # generation when an interrupt landed between the two renames.
+    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
+    try:
+        os.rename(path, old)
+        os.rename(gen, path)
+    finally:
+        # Both renames are inside the protected region: a failure or
+        # interrupt at EITHER must leave a complete dir at `path`.
+        # Progress is read from the FILESYSTEM, never a flag — a flag
+        # assignment after a rename leaves a bytecode window where an
+        # interrupt strands state the finally then misreads.
+        # rename(gen, path) is the only way `gen` vanishes, so:
+        if not os.path.isdir(gen):
+            # promoted (exceptionally or not): the parked copy is the
+            # only thing left to retire
+            shutil.rmtree(old, ignore_errors=True)
+        elif os.path.isdir(old):
+            # parked but not promoted: restore the live dir, and only
+            # delete the generation once restoration succeeded
+            try:
+                os.rename(old, path)
+            except OSError:
+                # leave BOTH survivors (old + gen) for manual recovery:
+                # deleting either could drop the last complete copy
+                pass
+            else:
+                shutil.rmtree(gen, ignore_errors=True)
+        else:
+            # parking never happened: `path` is untouched
+            shutil.rmtree(gen, ignore_errors=True)
+    return result
+
+
+class _ShardCommit(WriterCommitMessage):
+    def __init__(self, filename: str):
+        self.filename = filename
+
+
+class ManifestShardWriter(DataSourceWriter):
+    """Commit protocol of the sharded Python DataSource writers
+    (``sources/wds.py``, ``sources/jsonlgz.py``). A subclass validates
+    its schema, calls ``__init__(path, overwrite)``, sets
+    ``shard_prefix``/``shard_suffix`` and encodes one shard in
+    ``write_shard(path, rows)``.
+
+    - Each task writes ``<prefix>-<partitionId>-<uuid><suffix>`` (unique
+      per attempt, so retries cannot collide) and returns its name.
+    - ``commit`` publishes a ``_SUCCESS`` manifest listing exactly the
+      committed shards (with ``publish_file``), then retires the
+      previous generation's shards.
+    - ``abort`` removes the shards of the tasks that succeeded.
+
+    Crash-safe overwrite: nothing is deleted up front, so a failed job
+    leaves the previous generation (shards + manifest) fully readable;
+    manifest-honoring readers never see in-flight shards. Only files
+    ending in ``shard_suffix`` are ever removed; subdirectories are
+    ignored."""
+
+    shard_prefix: str
+    shard_suffix: str
+
+    def __init__(self, path: str, overwrite: bool):
+        self.path = path
+        self.overwrite = overwrite
+        self._old_shards: list[str] = []
+        # a crash between writing _SUCCESS.tmp and the replace in
+        # commit() strands the tmp forever (the suffix filters skip it);
+        # clear any stale one now — a new write generation is starting,
+        # so no in-flight commit can own it
+        try:
+            os.remove(os.path.join(path, "_SUCCESS.tmp"))
+        except OSError:
+            pass
+        if overwrite and os.path.isdir(path):
+            self._old_shards = [
+                e.name
+                for e in os.scandir(path)
+                if e.is_file() and e.name.endswith(self.shard_suffix)
+            ]
+        os.makedirs(path, exist_ok=True)
+
+    def write_shard(self, path: str, rows) -> None:
+        raise NotImplementedError
+
+    def write(self, iterator) -> _ShardCommit:
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        name = f"{self.shard_prefix}-{pid:05d}-{uuid.uuid4().hex}{self.shard_suffix}"
+        self.write_shard(os.path.join(self.path, name), iterator)
+        return _ShardCommit(name)
+
+    def commit(self, messages) -> None:
+        manifest = sorted(m.filename for m in messages)
+        final = os.path.join(self.path, "_SUCCESS")
+        if not self.overwrite and os.path.exists(final):
+            # append: the committed generation is old manifest UNION new
+            # shards. Without the merge, rewriting _SUCCESS with only
+            # this job's shard names would silently hide every previous
+            # shard from manifest-honoring readers while their files sit
+            # orphaned on disk.
+            with open(final) as f:
+                manifest = sorted(
+                    {ln.strip() for ln in f if ln.strip()} | set(manifest)
+                )
+        publish_file(final, "\n".join(manifest))
+        # new generation is durable; now retire the old shards
+        keep = set(manifest)
+        for name in self._old_shards:
+            if name not in keep:
+                try:
+                    os.remove(os.path.join(self.path, name))
+                except OSError:
+                    pass
+
+    def abort(self, messages) -> None:
+        # failed tasks contribute None commit messages (DataSourceWriter
+        # contract) — skip them or the cleanup itself crashes and the
+        # succeeded tasks' orphan shards survive
+        for m in messages:
+            if m is None:
+                continue
+            try:
+                os.remove(os.path.join(self.path, m.filename))
+            except OSError:
+                pass
+
+
 def compact_parquet_dir(
     spark,
     path: str,
@@ -402,10 +551,10 @@ def compact_parquet_dir(
     Policy: measure the directory; if the MEAN data-file size is
     already >= trigger_ratio * target_bytes, do nothing (report only —
     compaction must be idempotent and cheap to re-invoke from cron).
-    Otherwise rewrite into a sibling temp dir and atomically swap
-    (rename old → .trash, new → path, drop trash). Readers racing the
-    swap see either generation, never a partial one; a crash mid-swap
-    leaves the .trash copy for manual recovery.
+    Otherwise rewrite into a new generation and swap it in with
+    ``replace_dir``: a failed rewrite or promotion leaves the original
+    dir in place, and a crash between the two renames leaves the
+    parked ``.old-*`` copy for manual recovery.
 
     Layout-aware rewrite:
     - UNPARTITIONED dir: coalesce(ceil(total/target)) — coalesce, not
@@ -425,7 +574,6 @@ def compact_parquet_dir(
     is pinned by test (count + value hash before/after)."""
     import math
     import re
-    import shutil
 
     def _data_files(d: str) -> list[str]:
         out = []
@@ -456,10 +604,6 @@ def compact_parquet_dir(
     n_out = max(1, math.ceil(total / target_bytes))
     if n_out >= len(files):  # gluing wouldn't reduce the file count
         return report
-    tmp = path.rstrip("/") + ".compact_tmp"
-    trash = path.rstrip("/") + ".trash"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
     if keys:
         # A maintenance pass must be a LAYOUT-only rewrite: with
         # default partition-column type inference the re-read ALTERS
@@ -475,8 +619,6 @@ def compact_parquet_dir(
         # read of OTHER partitioned paths silently see string-typed
         # partition columns for the compaction window). Downstream
         # readers of the compacted path re-infer exactly as before.
-        from pyspark.sql import types as T
-
         # the DATA schema must be the MERGE across every leaf file —
         # taking one arbitrary footer (the pre-r10 form) silently and
         # permanently dropped any column a later append added, during a
@@ -491,20 +633,13 @@ def compact_parquet_dir(
             + [T.StructField(k, T.StringType()) for k in keys]
         )
         df = spark.read.schema(full).parquet(path)
-        (
-            df.repartition(*keys)
-            .write.mode("overwrite")
-            .partitionBy(*keys)
-            .parquet(tmp)
-        )
+        writer = df.repartition(*keys).write.partitionBy(*keys)
     else:
         # mergeSchema for the same reason as the partitioned branch:
         # the single-footer read drops any column a later append added
         df = spark.read.option("mergeSchema", "true").parquet(path)
-        df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    os.rename(path, trash)
-    os.rename(tmp, path)
-    shutil.rmtree(trash, ignore_errors=True)
+        writer = df.coalesce(n_out).write
+    replace_dir(path, writer.parquet)
     report["compacted"] = True
     report["files_after"] = len(_data_files(path))
     return report

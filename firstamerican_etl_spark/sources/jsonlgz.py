@@ -14,13 +14,12 @@ Usage::
     spark.dataSource.register(JsonlGzDataSource)
     df.write.format("jsonlgz").mode("overwrite").option("path", out).save()
 
-Commit protocol: each task writes ``part-<partitionId>-<uuid>.jsonl.gz``
-(unique name per attempt → retries can't collide), returns the file
-name as its commit message; the driver-side ``commit`` writes a
-``_SUCCESS`` manifest listing exactly the committed shards, and
-``abort`` removes the orphans. Readers that honor the manifest get
-task-retry atomicity; plain directory readers see at-least-once files
-(same contract as Hadoop's v1 committer without the rename).
+Commit protocol: each task writes ``part-<partitionId>-<uuid>.jsonl.gz``;
+``sources/io.ManifestShardWriter`` publishes a ``_SUCCESS`` manifest of
+exactly the committed shards, keeps overwrite crash-safe and removes
+orphans on abort. Readers that honor the manifest get task-retry
+atomicity; plain directory readers see at-least-once files (same
+contract as Hadoop's v1 committer without the rename).
 
 Supported value types: the JSON-native scalars (str/int/float/bool/
 None) plus date/timestamp (ISO strings) and arrays/structs of those —
@@ -33,20 +32,11 @@ from __future__ import annotations
 import datetime as _dt
 import gzip
 import json
-import os
-import uuid
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceWriter,
-    WriterCommitMessage,
-)
 from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSource
 
-
-class _ShardCommit(WriterCommitMessage):
-    def __init__(self, filename: str):
-        self.filename = filename
+from firstamerican_etl_spark.sources.io import ManifestShardWriter
 
 
 def _jsonable(v):
@@ -61,87 +51,19 @@ def _jsonable(v):
     return v
 
 
-class JsonlGzWriter(DataSourceWriter):
+class JsonlGzWriter(ManifestShardWriter):
+    shard_prefix, shard_suffix = "part", ".jsonl.gz"
+
     def __init__(self, schema: T.StructType, options: dict, overwrite: bool):
-        self.path = options["path"]
         self.fields = [f.name for f in schema.fields]
-        # Crash-safe overwrite, same protocol as sources/wds.py (r10
-        # review — the old eager delete-everything-up-front (a) crashed
-        # with IsADirectoryError on any subdirectory entry and (b) left
-        # NO readable generation if the job then failed): nothing is
-        # deleted here; old shards are retired in commit() AFTER the new
-        # manifest is durable. uuid shard names cannot collide with the
-        # old generation. Only *.jsonl.gz files are ever touched.
-        self.overwrite = overwrite
-        self._old_shards: list[str] = []
-        # a crash between writing _SUCCESS.tmp and the atomic replace
-        # strands the tmp; clear any stale one — a new generation is
-        # starting, so no in-flight commit can own it
-        try:
-            os.remove(os.path.join(self.path, "_SUCCESS.tmp"))
-        except OSError:
-            pass
-        if overwrite and os.path.isdir(self.path):
-            self._old_shards = [
-                e.name
-                for e in os.scandir(self.path)
-                if e.is_file() and e.name.endswith(".jsonl.gz")
-            ]
-        os.makedirs(self.path, exist_ok=True)
+        super().__init__(options["path"], overwrite)
 
-    def write(self, iterator) -> _ShardCommit:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}.jsonl.gz"
-        full = os.path.join(self.path, name)
-        with gzip.open(full, "wt", encoding="utf-8") as out:
-            for row in iterator:
+    def write_shard(self, path: str, rows) -> None:
+        with gzip.open(path, "wt", encoding="utf-8") as out:
+            for row in rows:
                 rec = {k: _jsonable(v) for k, v in zip(self.fields, row)}
                 out.write(json.dumps(rec, ensure_ascii=False))
                 out.write("\n")
-        return _ShardCommit(name)
-
-    def commit(self, messages) -> None:
-        manifest = sorted(m.filename for m in messages)
-        if not self.overwrite:
-            # append: committed generation = old manifest UNION new
-            # shards, or manifest-honoring readers would silently lose
-            # every previous shard (sources/wds.py, r10 review)
-            prev = os.path.join(self.path, "_SUCCESS")
-            if os.path.exists(prev):
-                with open(prev) as f:
-                    manifest = sorted(
-                        {ln.strip() for ln in f if ln.strip()} | set(manifest)
-                    )
-        # atomic manifest swap (os.replace), then retire old shards —
-        # a crash anywhere leaves either the old or the new generation
-        # fully readable, never a torn one
-        final = os.path.join(self.path, "_SUCCESS")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(manifest))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, final)
-        keep = set(manifest)
-        for name in self._old_shards:
-            if name not in keep:
-                try:
-                    os.remove(os.path.join(self.path, name))
-                except OSError:
-                    pass
-
-    def abort(self, messages) -> None:
-        # failed tasks contribute None commit messages — skip them or
-        # the cleanup crashes and succeeded tasks' orphans survive
-        for m in messages:
-            if m is None:
-                continue
-            try:
-                os.remove(os.path.join(self.path, m.filename))
-            except OSError:
-                pass
 
 
 class JsonlGzDataSource(DataSource):

@@ -11,13 +11,12 @@ Write side::
        .write.format("wds").mode("overwrite")
        .option("path", out_dir).save())
 
-Each task writes ``shard-<partitionId>-<uuid>.tar`` (unique name per
-attempt — task retries cannot collide), returning the shard name as
-its commit message; driver-side ``commit`` writes a ``_SUCCESS``
-manifest listing exactly the committed shards, ``abort`` removes
-orphans. Binary columns are stored as-is; strings as UTF-8; anything
-else is rejected (encode upstream — engine discipline, no silent
-coercion).
+Each task writes ``shard-<partitionId>-<uuid>.tar``; the commit
+protocol (a ``_SUCCESS`` manifest of exactly the committed shards,
+crash-safe overwrite, orphan removal on abort) is
+``sources/io.ManifestShardWriter``. Binary columns are stored as-is;
+strings as UTF-8; anything else is rejected (encode upstream — engine
+discipline, no silent coercion).
 
 Read side::
 
@@ -48,24 +47,14 @@ import glob
 import io
 import os
 import tarfile
-import uuid
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from firstamerican_etl_spark.sources.io import ManifestShardWriter
 
 _KEY = "__key__"
 _STRING_EXTS = {"json", "txt", "cls"}
-
-
-class _ShardCommit(WriterCommitMessage):
-    def __init__(self, filename: str):
-        self.filename = filename
 
 
 class _Shard(InputPartition):
@@ -73,9 +62,10 @@ class _Shard(InputPartition):
         self.path = path
 
 
-class WdsWriter(DataSourceWriter):
+class WdsWriter(ManifestShardWriter):
+    shard_prefix, shard_suffix = "shard", ".tar"
+
     def __init__(self, schema: T.StructType, options: dict, overwrite: bool):
-        self.path = options["path"]
         names = [f.name for f in schema.fields]
         if _KEY not in names:
             raise ValueError(f"wds writer needs a '{_KEY}' column; got {names}")
@@ -88,39 +78,12 @@ class WdsWriter(DataSourceWriter):
                     f"got {f.dataType.simpleString()} (encode upstream)"
                 )
         self.fields = names
-        # Crash-safe overwrite: do NOT delete anything up front — a
-        # failed job must leave the previous generation (shards +
-        # _SUCCESS manifest) fully readable. Old shards are removed in
-        # commit(), after the new generation is durable; until then the
-        # reader keeps resolving the OLD manifest and never sees the
-        # in-flight shard files (uuid names cannot collide). Only
-        # *.tar files are ever touched — subdirectories are ignored.
-        self.overwrite = overwrite
-        self._old_shards: list[str] = []
-        # a crash between writing _SUCCESS.tmp and the atomic replace
-        # in commit() strands the tmp forever (the .tar-only filters
-        # skip it); clear any stale one now — a new write generation
-        # is starting, so no in-flight commit can own it
-        try:
-            os.remove(os.path.join(self.path, "_SUCCESS.tmp"))
-        except OSError:
-            pass
-        if overwrite and os.path.isdir(self.path):
-            self._old_shards = [
-                e.name
-                for e in os.scandir(self.path)
-                if e.is_file() and e.name.endswith(".tar")
-            ]
-        os.makedirs(self.path, exist_ok=True)
+        super().__init__(options["path"], overwrite)
 
-    def write(self, iterator) -> _ShardCommit:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        name = f"shard-{pid:05d}-{uuid.uuid4().hex}.tar"
+    def write_shard(self, path: str, rows) -> None:
         key_idx = self.fields.index(_KEY)
-        with tarfile.open(os.path.join(self.path, name), "w") as tar:
-            for row in iterator:
+        with tarfile.open(path, "w") as tar:
+            for row in rows:
                 key = str(row[key_idx])
                 for col, val in zip(self.fields, row):
                     if col == _KEY or val is None:
@@ -129,52 +92,6 @@ class WdsWriter(DataSourceWriter):
                     info = tarfile.TarInfo(f"{key}.{col}")
                     info.size = len(payload)
                     tar.addfile(info, io.BytesIO(bytes(payload)))
-        return _ShardCommit(name)
-
-    def commit(self, messages) -> None:
-        manifest = sorted(m.filename for m in messages)
-        if not self.overwrite:
-            # append: the committed generation is old manifest UNION new
-            # shards. Without the merge, rewriting _SUCCESS with only
-            # this job's shard names would silently hide every previous
-            # shard from manifest-honoring readers while their tars sit
-            # orphaned on disk (r10 review).
-            prev = os.path.join(self.path, "_SUCCESS")
-            if os.path.exists(prev):
-                with open(prev) as f:
-                    manifest = sorted(
-                        {ln.strip() for ln in f if ln.strip()} | set(manifest)
-                    )
-        # atomic manifest swap: a crash mid-commit must leave either
-        # the old generation's manifest or the new one, never a
-        # truncated half-written file (os.replace is atomic on POSIX)
-        final = os.path.join(self.path, "_SUCCESS")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(manifest))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, final)
-        # new generation is durable; now retire the old shards
-        keep = set(manifest)
-        for name in self._old_shards:
-            if name not in keep:
-                try:
-                    os.remove(os.path.join(self.path, name))
-                except OSError:
-                    pass
-
-    def abort(self, messages) -> None:
-        # failed tasks contribute None commit messages (DataSourceWriter
-        # contract) — skip them or the cleanup itself crashes and the
-        # succeeded tasks' orphan shards survive (r10 review)
-        for m in messages:
-            if m is None:
-                continue
-            try:
-                os.remove(os.path.join(self.path, m.filename))
-            except OSError:
-                pass
 
 
 def _shard_paths(path: str) -> list[str]:

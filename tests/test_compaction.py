@@ -31,9 +31,8 @@ def test_compaction_preserves_content_and_reduces_files(spark, sf_dir, tmp_path)
     got = spark.read.parquet(d)
     assert got.count() == n0
     assert _value_hash(got) == h0
-    # no leftover temp/trash generations
-    assert not os.path.exists(d + ".compact_tmp")
-    assert not os.path.exists(d + ".trash")
+    # no leftover generation or parked copy, whatever its name
+    assert os.listdir(tmp_path) == ["frag"]
 
 
 def test_compaction_noop_when_files_already_big(spark, sf_dir, tmp_path):
@@ -133,3 +132,32 @@ def test_compaction_keeps_a_column_added_by_a_later_append(spark, tmp_path):
     assert sorted(got.columns) == ["extra", "id"]
     assert got.count() == 210
     assert got.filter(F.col("extra") == F.col("id") * 2).count() == 10
+
+
+def test_failed_promotion_restores_the_original_dir(spark, tmp_path, monkeypatch):
+    """A promotion rename that fails after the live dir was parked must
+    put the original dir back: the error propagates, every row still
+    reads at the original path, and no generation or parked copy is
+    left next to it."""
+    import pytest
+
+    d = str(tmp_path / "frag")
+    spark.range(500).repartition(16).write.parquet(d)
+
+    real_rename = os.rename
+    fired = []
+
+    def failing_rename(src, dst):
+        if dst == d and not fired:  # the first rename onto the live path
+            fired.append(src)
+            raise OSError(28, "No space left on device (injected)")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        compact_parquet_dir(spark, d, target_bytes=1 << 30)
+    monkeypatch.undo()
+
+    assert fired
+    assert spark.read.parquet(d).count() == 500
+    assert os.listdir(tmp_path) == ["frag"]

@@ -442,3 +442,39 @@ def test_force_compact_resolves_loser_mediated_bridge(spark, tmp_path):
     # sanity: the fixture really made A~A2 a near-dup pair at build
     # time (A2 absent from both corpora)
     assert all(d != 2 for d, _ in want)
+
+
+def test_failed_compaction_promotion_restores_the_corpus(spark, tmp_path, monkeypatch):
+    """compact_corpus's swap: a promotion rename that fails after the
+    live corpus was parked must put it back with its ``_index``
+    sidecar, propagate the error and leave no sibling generation."""
+    import os
+
+    from firstamerican_etl_spark.pipeline.corpus_build import compact_corpus
+
+    a = "was would into know not could use its no him way have"
+    b = "make some your his more have than than up use been down"
+    out = str(tmp_path / "corpus")
+    docs = spark.createDataFrame([(1, a, "en"), (2, b, "en")],
+                                 ["doc_id", "text", "lang"])
+    build_corpus(spark, docs, out, token_budget=BUDGET, min_tokens=5)
+    n0 = spark.read.parquet(out).count()
+
+    real_rename = os.rename
+    fired = []
+
+    def failing_rename(src, dst):
+        if dst == out and not fired:  # the first rename onto the live path
+            fired.append(src)
+            raise OSError(28, "No space left on device (injected)")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        compact_corpus(spark, out, force=True)
+    monkeypatch.undo()
+
+    assert fired
+    assert spark.read.parquet(out).count() == n0
+    assert os.path.isdir(os.path.join(out, "_index"))
+    assert os.listdir(tmp_path) == ["corpus"]

@@ -146,13 +146,9 @@ def test_no_session_global_conf_mutation_in_query_modules():
     )
 
 
-def test_thread_pools_only_in_sanctioned_places():
-    """Concurrent Spark actions go through operators/scale.
-    concurrent_actions, the one place per-stage job-group tagging can
-    be added. Two other pools are deliberate: extract_zips maps zlib
-    member extraction (not Spark actions; thousands of members on a
-    national run), and build_corpus_delta's bridge audit is a
-    background future that is cancelled on error."""
+def _holders(uses) -> set[tuple[str, str]]:
+    """(relative path, innermost function name) of every package AST
+    node for which ``uses(node)`` holds; comments never match."""
     import ast
     import glob as _glob
     import os as _os
@@ -161,19 +157,11 @@ def test_thread_pools_only_in_sanctioned_places():
         _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
         "firstamerican_etl_spark",
     )
-
-    def _uses(node) -> bool:
-        return (
-            (isinstance(node, ast.Name) and node.id == "ThreadPoolExecutor")
-            or (isinstance(node, ast.Attribute) and node.attr == "ThreadPoolExecutor")
-            or (isinstance(node, ast.alias) and node.name == "ThreadPoolExecutor")
-        )
-
     found = set()
 
     def _walk(node, rel, func):
         for child in ast.iter_child_nodes(node):
-            if _uses(child):
+            if uses(child):
                 found.add((rel, func))
             inner = (
                 child.name
@@ -185,10 +173,60 @@ def test_thread_pools_only_in_sanctioned_places():
     for path in _glob.glob(_os.path.join(root, "**", "*.py"), recursive=True):
         rel = _os.path.relpath(path, root).replace(_os.sep, "/")
         _walk(ast.parse(open(path).read()), rel, "<module>")
+    return found
+
+
+def test_thread_pools_only_in_sanctioned_places():
+    """Concurrent Spark actions go through operators/scale.
+    concurrent_actions, the one place per-stage job-group tagging can
+    be added. Two other pools are deliberate: extract_zips maps zlib
+    member extraction (not Spark actions; thousands of members on a
+    national run), and build_corpus_delta's bridge audit is a
+    background future that is cancelled on error."""
+    import ast
+
+    def _uses(node) -> bool:
+        return (
+            (isinstance(node, ast.Name) and node.id == "ThreadPoolExecutor")
+            or (isinstance(node, ast.Attribute) and node.attr == "ThreadPoolExecutor")
+            or (isinstance(node, ast.alias) and node.name == "ThreadPoolExecutor")
+        )
+
+    found = _holders(_uses)
     assert found == {
         ("operators/scale.py", "concurrent_actions"),
         ("sources/io.py", "extract_zips"),
         ("pipeline/corpus_build.py", "build_corpus_delta"),
+    }
+
+
+def test_on_disk_commits_have_one_copy_each():
+    """Every rename/replace/fsync commit goes through one of three
+    protocols: ``sources/io.replace_dir`` (live-dir generation swap),
+    ``sources/io.publish_file`` (durable small-file publish, used by
+    the manifest-shard writers and the bucketed-staging tag) and
+    ``operators/scale._commit_stage`` (publish into an absent staging
+    key, with reuse and lost-race adoption)."""
+    import ast
+
+    names = {"rename", "replace", "fsync"}
+
+    def _uses(node) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr in names
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        ) or (
+            isinstance(node, ast.ImportFrom)
+            and node.module == "os"
+            and any(a.name in names for a in node.names)
+        )
+
+    assert _holders(_uses) == {
+        ("operators/scale.py", "_commit_stage"),
+        ("sources/io.py", "replace_dir"),
+        ("sources/io.py", "publish_file"),
     }
 
 

@@ -20,6 +20,23 @@ def _sorted_rows(df, key):
     return [tuple(r) for r in df.orderBy(key).collect()]
 
 
+def write_range_clustered(df, path: str, cluster_by: list[str], num_files: int):
+    """Range-clustered parquet layout: repartitionByRange on the
+    cluster keys + sortWithinPartitions before writing, so each output
+    file covers a narrow, (near-)disjoint key range. Parquet row-group
+    min/max stats then make selective scans skip whole files — the
+    layout-level complement to predicate pushdown, and the standard
+    answer for time-series/fact tables queried by key range. Unlike
+    hive partitionBy (one DIRECTORY per value), the file count stays
+    fixed on a high-cardinality column."""
+    (
+        df.repartitionByRange(num_files, *cluster_by)
+        .sortWithinPartitions(*cluster_by)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
 def test_csv_roundtrip_pipe_delimited(spark, sf_dir, tmp_path):
     n = load_table(spark, sf_dir, "nation")
     path = str(tmp_path / "nation_csv")
@@ -46,8 +63,6 @@ def test_range_clustered_layout_prunes(spark, sf_dir, tmp_path):
     via per-file min/max from parquet footers)."""
     import pyarrow.parquet as pq
     from pathlib import Path
-
-    from firstamerican_etl_spark.sources.io import write_range_clustered
 
     o = load_table(spark, sf_dir, "orders")
     path = str(tmp_path / "orders_ranged")
