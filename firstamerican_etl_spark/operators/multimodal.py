@@ -8,8 +8,9 @@ Pattern (the 100 TB shape):
   NEVER decoded inside Catalyst expressions; all pixel/sample work
   happens in vectorized Python batches (Arrow transfer, no per-row
   pickling)
-- decode / resize / frame-sample are ``mapInPandas`` stages: one
-  executor task per input split, ``spark.sql.execution.arrow
+- decode / resize / frame-sample are per-row kernels behind
+  ``operators/kernels.map_rows`` (one narrow ``mapInPandas`` stage):
+  one executor task per input split, ``spark.sql.execution.arrow
   .maxRecordsPerBatch`` bounds batch memory (payloads are big — set it
   low for real assets)
 - partitioning: assets are hash-distributed on asset id; a decode stage
@@ -19,7 +20,7 @@ Pattern (the 100 TB shape):
 Real codecs (PIL/opencv/torchaudio) are NOT in this container, so the
 pixel decoder is gated: ``decode_image_real`` raises
 ``NotImplementedError`` unless PIL imports, and the default pipeline
-uses ``fake_decode`` — a deterministic byte-statistics "decode" that
+uses ``decode_assets`` — a deterministic byte-statistics "decode" that
 exercises identical schemas, batch shapes, and row-multiplicity as a
 real decoder would.
 """
@@ -29,12 +30,13 @@ from __future__ import annotations
 import hashlib
 import math
 import zlib
-from collections.abc import Iterable, Iterator
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from firstamerican_etl_spark.operators.kernels import map_rows
 
 #: Typed metadata carried alongside every binary payload.
 ASSET_META = T.StructType(
@@ -53,6 +55,12 @@ ASSET_SCHEMA = T.StructType(
         T.StructField("meta", ASSET_META),
     ]
 )
+
+
+def _asset_row(asset_id, payload: bytes, fmt: str, width: int, height: int) -> tuple:
+    """One ``ASSET_SCHEMA`` row; ``n_bytes`` is the payload length."""
+    meta = {"format": fmt, "width": width, "height": height, "n_bytes": len(payload)}
+    return asset_id, payload, meta
 
 
 def documents_as_assets(docs: DataFrame) -> DataFrame:
@@ -88,31 +96,38 @@ DECODE_SCHEMA = T.StructType(
 )
 
 
-def fake_decode(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Deterministic stand-in decoder: byte statistics instead of pixel
-    planes. Identical plumbing to a real decoder — consumes (asset_id,
-    payload, meta) Arrow batches, emits one row per asset."""
-    for pdf in batches:
-        payloads = pdf["payload"]
-        yield pd.DataFrame(
-            {
-                "asset_id": pdf["asset_id"],
-                "width": [m["width"] for m in pdf["meta"]],
-                "height": [m["height"] for m in pdf["meta"]],
-                "n_bytes": payloads.map(len).astype("int64"),
-                "mean_byte": payloads.map(
-                    lambda b: (sum(b) / len(b)) if len(b) else 0.0
-                ),
-                "checksum": payloads.map(lambda b: zlib.crc32(b)).astype("int64"),
-            }
-        )
+def _decode_row(asset_id, payload: bytes, width: int, height: int, values) -> tuple:
+    """One ``DECODE_SCHEMA`` row: ``mean_byte`` is the mean of the
+    decoded sample ``values`` (0.0 when empty), ``checksum`` the crc32
+    of the raw payload."""
+    mean = sum(values) / len(values) if values else 0.0
+    return asset_id, width, height, len(payload), mean, zlib.crc32(payload)
+
+
+def _pil_pixels(payload: bytes) -> tuple[int, int, list[int]]:
+    """Decode with pillow: (width, height, flat values over all bands)."""
+    import io
+
+    from PIL import Image
+
+    img = Image.open(io.BytesIO(payload))
+    px = list(img.getdata())
+    flat = [v for tup in px for v in tup] if px and isinstance(px[0], tuple) else px
+    return img.width, img.height, flat
 
 
 def decode_assets(assets: DataFrame) -> DataFrame:
-    """Decode stage: binary → per-asset stats. Narrow (no shuffle);
-    Arrow-batched. Swap ``fake_decode`` for a real codec fn with the
-    same signature when the codec libs exist."""
-    return assets.mapInPandas(fake_decode, schema=DECODE_SCHEMA)
+    """Decode stage: binary → per-asset stats. Deterministic stand-in
+    decoder — byte statistics instead of pixel planes, width/height
+    from the carried metadata, one row per asset; identical plumbing to
+    a real decoder. Narrow (no shuffle); Arrow-batched."""
+
+    def fake_decode(asset_id, payload, meta):
+        yield _decode_row(asset_id, payload, meta["width"], meta["height"], payload)
+
+    return map_rows(
+        assets.select("asset_id", "payload", "meta"), fake_decode, DECODE_SCHEMA
+    )
 
 
 def decode_image_real(assets: DataFrame) -> DataFrame:
@@ -134,39 +149,10 @@ def decode_image_real(assets: DataFrame) -> DataFrame:
             "codec libs — use decode_assets (deterministic fake) instead"
         ) from e
 
-    def real_decode(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def real_decode(asset_id, payload):
+        yield _decode_row(asset_id, payload, *_pil_pixels(payload))
 
-        from PIL import Image
-
-        for pdf in batches:
-            ids, ws, hs, nb, means, sums = [], [], [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = Image.open(io.BytesIO(payload))
-                px = list(img.getdata())
-                flat = (
-                    [v for tup in px for v in tup]
-                    if px and isinstance(px[0], tuple)
-                    else list(px)
-                )
-                ids.append(asset_id)
-                ws.append(img.width)
-                hs.append(img.height)
-                nb.append(len(payload))
-                means.append(sum(flat) / len(flat) if flat else 0.0)
-                sums.append(zlib.crc32(payload))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_bytes": pd.Series(nb, dtype="int64"),
-                    "mean_byte": pd.Series(means, dtype="float64"),
-                    "checksum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return assets.mapInPandas(real_decode, schema=DECODE_SCHEMA)
+    return map_rows(assets.select("asset_id", "payload"), real_decode, DECODE_SCHEMA)
 
 
 # ---------------------------------------------------- netpbm pixels
@@ -249,28 +235,12 @@ def documents_as_ppm_assets(docs: DataFrame) -> DataFrame:
     mapInPandas generate stage (the binary raster can't be built from
     Catalyst expressions), zero shuffles."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h, g = i % 13 + 2, i % 7 + 2, i % 256
-                payload = encode_ppm(w, h, g)
-                rows.append(
-                    (
-                        i,
-                        payload,
-                        {
-                            "format": "image/x-portable-pixmap",
-                            "width": w,
-                            "height": h,
-                            "n_bytes": len(payload),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload", "meta"])
+    def ppm_asset(doc_id):
+        w, h = doc_id % 13 + 2, doc_id % 7 + 2
+        payload = encode_ppm(w, h, doc_id % 256)
+        yield _asset_row(doc_id, payload, "image/x-portable-pixmap", w, h)
 
-    return docs.select("doc_id").mapInPandas(fn, schema=ASSET_SCHEMA)
+    return map_rows(docs.select("doc_id"), ppm_asset, ASSET_SCHEMA)
 
 
 def decode_image_pixels(assets: DataFrame) -> DataFrame:
@@ -285,49 +255,23 @@ def decode_image_pixels(assets: DataFrame) -> DataFrame:
     checksum = crc32 of the raw payload. Same 100 TB shape: narrow
     Arrow-batched mapInPandas, zero shuffles, partitioning preserved."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, nb, means, sums = [], [], [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                payload = bytes(payload)
-                if payload[:2] in (b"P2", b"P3", b"P5", b"P6"):
-                    w, h, _, px = _decode_netpbm(payload)
-                else:
-                    try:
-                        import io
+    def pixel_decode(asset_id, payload):
+        payload = bytes(payload)
+        if payload[:2] in (b"P2", b"P3", b"P5", b"P6"):
+            w, h, _, px = _decode_netpbm(payload)
+        else:
+            try:
+                w, h, px = _pil_pixels(payload)
+            except ImportError as e:
+                raise NotImplementedError(
+                    "non-netpbm payload needs a codec lib (pillow); "
+                    "this environment ships none"
+                ) from e
+        yield _decode_row(asset_id, payload, w, h, px)
 
-                        from PIL import Image
-                    except ImportError as e:
-                        raise NotImplementedError(
-                            "non-netpbm payload needs a codec lib (pillow); "
-                            "this environment ships none"
-                        ) from e
-                    img = Image.open(io.BytesIO(payload))
-                    raw = list(img.getdata())
-                    px = (
-                        [v for tup in raw for v in tup]
-                        if raw and isinstance(raw[0], tuple)
-                        else list(raw)
-                    )
-                    w, h = img.width, img.height
-                ids.append(asset_id)
-                ws.append(w)
-                hs.append(h)
-                nb.append(len(payload))
-                means.append(sum(px) / len(px) if px else 0.0)
-                sums.append(zlib.crc32(payload))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_bytes": pd.Series(nb, dtype="int64"),
-                    "mean_byte": pd.Series(means, dtype="float64"),
-                    "checksum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return assets.mapInPandas(fn, schema=DECODE_SCHEMA)
+    return map_rows(
+        assets.select("asset_id", "payload"), pixel_decode, DECODE_SCHEMA
+    )
 
 
 # ------------------------------------------------------------- resize
@@ -338,33 +282,16 @@ def resize_assets(assets: DataFrame, max_dim: int = 64) -> DataFrame:
     payload — a real resize re-encodes pixels). Output schema == input
     schema, so resize stages compose/chain."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_payload, out_meta = [], []
-            for payload, meta in zip(pdf["payload"], pdf["meta"]):
-                w, h = meta["width"], meta["height"]
-                scale = min(1.0, max_dim / max(w, h, 1))
-                nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-                keep = max(1, int(len(payload) * scale * scale))
-                resized = bytes(payload[:keep])
-                out_payload.append(resized)
-                out_meta.append(
-                    {
-                        "format": meta["format"],
-                        "width": nw,
-                        "height": nh,
-                        "n_bytes": len(resized),
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": out_payload,
-                    "meta": out_meta,
-                }
-            )
+    def resize(asset_id, payload, meta):
+        w, h = meta["width"], meta["height"]
+        scale = min(1.0, max_dim / max(w, h, 1))
+        nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
+        keep = max(1, int(len(payload) * scale * scale))
+        yield _asset_row(asset_id, bytes(payload[:keep]), meta["format"], nw, nh)
 
-    return assets.mapInPandas(fn, schema=ASSET_SCHEMA)
+    return map_rows(
+        assets.select("asset_id", "payload", "meta"), resize, ASSET_SCHEMA
+    )
 
 
 # --------------------------------------------------------- frame sample
@@ -386,28 +313,12 @@ def frame_sample(assets: DataFrame, frame_bytes: int = 256, every: int = 1) -> D
     frame-sampler has. Frames are fixed byte windows here; a real
     impl would seek keyframes."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, lens, sums = [], [], [], []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                n = len(payload)
-                n_frames = math.ceil(n / frame_bytes) if n else 0
-                for i in range(0, n_frames, every):
-                    chunk = bytes(payload[i * frame_bytes : (i + 1) * frame_bytes])
-                    ids.append(asset_id)
-                    idxs.append(i)
-                    lens.append(len(chunk))
-                    sums.append(zlib.crc32(chunk))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_len": pd.Series(lens, dtype="int64"),
-                    "frame_checksum": pd.Series(sums, dtype="int64"),
-                }
-            )
+    def frames(asset_id, payload):
+        for i in range(0, math.ceil(len(payload) / frame_bytes), every):
+            chunk = bytes(payload[i * frame_bytes : (i + 1) * frame_bytes])
+            yield asset_id, i, len(chunk), zlib.crc32(chunk)
 
-    return assets.mapInPandas(fn, schema=FRAME_SCHEMA)
+    return map_rows(assets.select("asset_id", "payload"), frames, FRAME_SCHEMA)
 
 
 # ------------------------------------------------------ featurization
@@ -428,23 +339,14 @@ def featurize(assets: DataFrame, dim: int = 8) -> DataFrame:
         ]
     )
 
-    def vec(payload: bytes) -> list[float]:
+    def vec(asset_id, payload):
         out = []
         for j in range(dim):
             h = hashlib.sha256(payload + str(j).encode()).digest()
             out.append(int.from_bytes(h[:4], "big") / 2**32)
-        return out
+        yield asset_id, out
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "features": pdf["payload"].map(vec),
-                }
-            )
-
-    return assets.mapInPandas(fn, schema=out_schema)
+    return map_rows(assets.select("asset_id", "payload"), vec, out_schema)
 
 
 # ------------------------------------------------- perceptual hashing
@@ -487,8 +389,6 @@ def _gradient_pixels(doc_id: int) -> bytes:
     at mod-256 wrap pixels → small nonzero Hamming distance), while
     different bases produce uncorrelated gradient-sign patterns. Every
     term is integer, so a SQL oracle recomputes the raster exactly."""
-    import numpy as np
-
     base, delta = doc_id // 2, doc_id % 2
     a = (base * 7) % 11 + 1
     b = (base * 3) % 13 + 1
@@ -508,27 +408,12 @@ def documents_as_gradient_assets(docs: DataFrame) -> DataFrame:
     consecutive even/odd doc_ids are designed near-duplicates. Narrow
     mapInPandas generate stage, zero shuffles."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                payload = encode_pgm(GRADIENT_W, GRADIENT_H, _gradient_pixels(i))
-                rows.append(
-                    (
-                        i,
-                        payload,
-                        {
-                            "format": "image/x-portable-graymap",
-                            "width": GRADIENT_W,
-                            "height": GRADIENT_H,
-                            "n_bytes": len(payload),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload", "meta"])
+    def gradient_asset(doc_id):
+        payload = encode_pgm(GRADIENT_W, GRADIENT_H, _gradient_pixels(doc_id))
+        fmt = "image/x-portable-graymap"
+        yield _asset_row(doc_id, payload, fmt, GRADIENT_W, GRADIENT_H)
 
-    return docs.select("doc_id").mapInPandas(fn, schema=ASSET_SCHEMA)
+    return map_rows(docs.select("doc_id"), gradient_asset, ASSET_SCHEMA)
 
 
 def image_dhash_bands(assets: DataFrame) -> DataFrame:
@@ -551,54 +436,36 @@ def image_dhash_bands(assets: DataFrame) -> DataFrame:
     partitioning preserved, one int64 row per asset out — the shuffle
     that follows carries 4 ints per image, never pixels."""
 
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    # band packing weights: bit (r, gx) of band k is bits[2k+r, gx]
+    # shifted by r*8 + gx
+    pack_w = (
+        np.int64(1)
+        << (np.arange(2)[:, None] * 8 + np.arange(8)[None, :])
+    )  # (2, 8)
 
-        # band packing weights: bit (r, gx) of band k is bits[2k+r, gx]
-        # shifted by r*8 + gx
-        pack_w = (
-            np.int64(1)
-            << (np.arange(2)[:, None] * 8 + np.arange(8)[None, :])
-        )  # (2, 8)
+    def dhash(asset_id, payload):
+        w, h, _, px = _decode_netpbm(bytes(payload))
+        arr = np.asarray(px, dtype=np.int64)
+        if arr.size == 3 * w * h:  # color: sum channels per pixel
+            arr = arr.reshape(h * w, 3).sum(axis=1)
+        arr = arr.reshape(h, w)
+        xs = np.array([(g * w) // 9 for g in range(10)])
+        ys = np.array([(g * h) // 8 for g in range(9)])
+        # integral image: every 9x8 box sum in three vector ops
+        # (the per-block double loop was 72 .sum() calls/image)
+        ii = np.zeros((h + 1, w + 1), dtype=np.int64)
+        ii[1:, 1:] = arr.cumsum(axis=0).cumsum(axis=1)
+        s = (
+            ii[np.ix_(ys[1:], xs[1:])]
+            - ii[np.ix_(ys[1:], xs[:-1])]
+            - ii[np.ix_(ys[:-1], xs[1:])]
+            + ii[np.ix_(ys[:-1], xs[:-1])]
+        )  # (8, 9)
+        n = np.outer(np.diff(ys), np.diff(xs))  # (8, 9)
+        bits = (s[:, :-1] * n[:, 1:] < s[:, 1:] * n[:, :-1]).astype(
+            np.int64
+        )  # (8 rows, 8 cols)
+        vals = (bits.reshape(4, 2, 8) * pack_w).sum(axis=(1, 2))
+        yield (asset_id, *vals.tolist())
 
-        for pdf in batches:
-            ids, bands = [], [[], [], [], []]
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, _, px = _decode_netpbm(bytes(payload))
-                arr = np.asarray(px, dtype=np.int64)
-                if arr.size == 3 * w * h:  # color: sum channels per pixel
-                    arr = arr.reshape(h * w, 3).sum(axis=1)
-                arr = arr.reshape(h, w)
-                xs = np.array([(g * w) // 9 for g in range(10)])
-                ys = np.array([(g * h) // 8 for g in range(9)])
-                # integral image: every 9x8 box sum in three vector ops
-                # (the per-block double loop was 72 .sum() calls/image)
-                ii = np.zeros((h + 1, w + 1), dtype=np.int64)
-                ii[1:, 1:] = arr.cumsum(axis=0).cumsum(axis=1)
-                s = (
-                    ii[np.ix_(ys[1:], xs[1:])]
-                    - ii[np.ix_(ys[1:], xs[:-1])]
-                    - ii[np.ix_(ys[:-1], xs[1:])]
-                    + ii[np.ix_(ys[:-1], xs[:-1])]
-                )  # (8, 9)
-                n = np.outer(np.diff(ys), np.diff(xs))  # (8, 9)
-                bits = (s[:, :-1] * n[:, 1:] < s[:, 1:] * n[:, :-1]).astype(
-                    np.int64
-                )  # (8 rows, 8 cols)
-                vals = (bits.reshape(4, 2, 8) * pack_w).sum(axis=(1, 2))
-                ids.append(int(asset_id))
-                for k in range(4):
-                    bands[k].append(int(vals[k]))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "b0": pd.Series(bands[0], dtype="int64"),
-                    "b1": pd.Series(bands[1], dtype="int64"),
-                    "b2": pd.Series(bands[2], dtype="int64"),
-                    "b3": pd.Series(bands[3], dtype="int64"),
-                }
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        fn, schema=DHASH_SCHEMA
-    )
+    return map_rows(assets.select("asset_id", "payload"), dhash, DHASH_SCHEMA)

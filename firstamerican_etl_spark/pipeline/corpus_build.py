@@ -753,8 +753,9 @@ def compact_corpus(
     3. The surviving corpus is rewritten as a new generation and
        swapped in with ``sources/io.replace_dir`` (the ``_index``
        sidecar is copied across); a failed rewrite or promotion leaves
-       the live corpus in place. The bridged-components record is
-       cleared after the swap.
+       the live corpus in place. When no written doc is dropped the
+       rewrite is skipped. The bridged-components record is cleared
+       after the swap.
 
     Doc SETS after compaction equal a from-scratch rebuild's exactly
     (bin_ids/splits of surviving rows are untouched — packing is the
@@ -788,15 +789,13 @@ def compact_corpus(
         F.col("node").alias("doc_id")
     )
     existing = spark.read.parquet(out_dir)
-    from pyspark.sql import Observation
-
-    obs = Observation("compact")
-    kept = existing.join(drop, "doc_id", "left_anti").observe(
-        obs, F.count(F.lit(1)).alias("n")
-    )
-    n_before = existing.count()
+    # count only WRITTEN docs: the drop list also holds build-time
+    # losers that never reached the corpus, so a non-empty drop list
+    # need not change a single row
+    n_removed = existing.join(drop, "doc_id", "left_semi").count()
 
     def _write(gen: str) -> None:
+        kept = existing.join(drop, "doc_id", "left_anti")
         kept.select(*existing.columns).write.partitionBy("split").parquet(gen)
         # the index sidecar (inside out_dir, _-prefixed) rides across.
         # COPY it rather than move it: a crash between a move and the
@@ -808,8 +807,8 @@ def compact_corpus(
             os.path.join(out_dir, "_index"), os.path.join(gen, "_index")
         )
 
-    replace_dir(out_dir, _write)
-    n_removed = n_before - int(obs.get["n"])
+    if n_removed:  # a clean corpus skips the rewrite, swap and _index copy
+        replace_dir(out_dir, _write)
     # the bridged record is cleared LAST, so a crash before this point
     # leaves a re-runnable state, never a corrupt one
     shutil.rmtree(

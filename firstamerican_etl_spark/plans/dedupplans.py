@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from firstamerican_etl_spark.operators.kernels import map_rows
 from firstamerican_etl_spark.operators.relational import array_pairs
 from firstamerican_etl_spark.plans.registry import register
 from firstamerican_etl_spark.sources.io import (
@@ -162,9 +163,9 @@ def shingle_hashes_col(wh_col, shingle_len: int = 5):
     branch — the old greatest(n, 1) floor emitted one pseudo-shingle
     whose element_at lookups ran past the array end, which is an
     INVALID_ARRAY_INDEX error under the driver's ANSI-on session for
-    any caller that forgot the pre-filter (minhash_signatures had no
-    such filter). CASE branches evaluate per-row only when taken, so
-    the out-of-bounds lookups never execute for short docs."""
+    any caller that forgot the pre-filter (the JVM MinHash signature
+    form had no such filter). CASE branches evaluate per-row only when
+    taken, so the out-of-bounds lookups never execute for short docs."""
     w = F.col(wh_col) if isinstance(wh_col, str) else wh_col
     n = F.size(w) - (shingle_len - 1)
     shingles = F.transform(
@@ -278,49 +279,6 @@ def _bucket_pairs(
     return F.when(F.size(arr) <= _CLIQUE_CAP, clique).otherwise(star)
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text", key: str = "doc_id",
-                       num_hashes: int = 32) -> DataFrame:
-    """MinHash signatures as columns mh0..mh{k-1}, one row per key.
-
-    Formulation matters for throughput: higher-order array functions
-    (aggregate/zip_with lambdas) are *interpreted* in Spark — no
-    whole-stage codegen, boxing per element. So instead of folding
-    arrays, explode the shingle hashes to rows and compute
-    ``min(a_i·h + b_i)`` as plain aggregates: fully codegen'd hash
-    aggregation. All shingles of a doc sit in the same input partition,
-    so map-side partial aggregation reduces to one row per doc before
-    the shuffle — at scale the exchange carries |docs| rows, not
-    |shingles|.
-    """
-    wh = exploded_word_hashes(df, text_col, keep=(key,))
-    # Reduce the full-range shingle hash to [0, p) ONCE (pmod keeps it
-    # non-negative, matching numpy's % on a positive modulus), then each
-    # permutation-min is a plain overflow-free affine aggregate
-    # (hp, a < 2^31 ⇒ hp·a + b < 2^63).
-    #
-    # The OUTER ``pmod .. _P31`` is load-bearing: without it the affine
-    # map is strictly increasing in hp, so every permutation's argmin
-    # collapses to the doc's single smallest shingle hash — 32
-    # "independent" hash functions degenerate to one, and band
-    # collisions fire all-or-nothing per pair instead of following the
-    # 1-(1-J⁴)⁸ S-curve (caught round 7 by an anti-correlation probe:
-    # a concat doc A+B could never band-match A on one band and B on
-    # another). The mod makes each permutation a genuine
-    # Carter–Wegman hash over Z_p with its own argmin.
-    exploded = wh.select(
-        key, F.explode(shingle_hashes_col("wh")).alias("h")
-    ).select(key, F.pmod(F.col("h"), F.lit(_P31)).alias("hp"))
-    aggs = []
-    for i in range(num_hashes):
-        a, b = _perm_consts(i)
-        aggs.append(
-            F.min(
-                F.pmod(F.col("hp") * F.lit(a) + F.lit(b), F.lit(_P31))
-            ).alias(f"mh{i}")
-        )
-    return exploded.groupBy(key).agg(*aggs)
-
-
 @register(
     "dedup_minhash_lsh",
     oracle=None,  # xxhash64-based signatures aren't ANSI-SQL-expressible
@@ -345,9 +303,9 @@ def minhash_bands(d: DataFrame, text_col: str = "text") -> DataFrame:
     re-inlinable, no recomputation concern).
 
     r15 (guide §4.2): signatures come from the numpy permutation-min
-    path — BIT-IDENTICAL to ``minhash_signatures`` (parity pinned by
-    tests/test_multimodal.py + test_ansi_parity.py keeps proving the
-    JVM form), measured −24% min / −21% med on the full LSH pipeline
+    path — BIT-IDENTICAL to the JVM aggregate form (parity pinned by
+    tests/test_multimodal.py, which keeps that form as the reference),
+    measured −24% min / −21% med on the full LSH pipeline
     in an interleaved 5-sweep A/B (jvm min 1.500/med 1.551 vs numpy
     1.138/1.220), the same win class as the r15 SimHash vote pass: 32
     codegen'd aggregate updates per shingle row beaten by one
@@ -578,18 +536,24 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_signatures_np(
     df: DataFrame, text_col: str = "text", key: str = "doc_id", num_hashes: int = 32
 ) -> DataFrame:
-    """MinHash signatures, Arrow/numpy path: shingle hashing stays
-    JVM-side (xxhash64 over word-hash windows), the 32 permutation-mins run as one
-    vectorized ``min(((h mod p)·a + b) mod p)`` per doc batch in numpy —
-    the same Mersenne-31 Carter–Wegman permutations as the JVM path
-    (numpy's ``%`` on a positive modulus matches Spark's ``pmod``, and
-    products stay < 2^62, so no wraparound on either engine; the outer
-    mod is what keeps the 32 permutations independent — see
-    ``minhash_signatures``). Bit-identical signatures to
-    ``minhash_signatures``; trades the 32 codegen'd aggregates + doc
-    shuffle for zero shuffle + one Arrow hop."""
+    """MinHash signatures as columns mh0..mh{k-1}, one row per key with
+    at least one shingle. Shingle hashing stays JVM-side (xxhash64 over
+    word-hash windows); the 32 permutation-mins run as one vectorized
+    ``min(((h mod p)·a + b) mod p)`` per doc in numpy — Mersenne-31
+    Carter–Wegman permutations (numpy's ``%`` on a positive modulus
+    matches Spark's ``pmod``, and products stay < 2^62, so no
+    wraparound). Bit-identical to the JVM aggregate form kept in
+    tests/ as the parity reference; that form's 32 codegen'd aggregates
+    + doc shuffle become zero shuffle + one Arrow hop.
+
+    The OUTER mod is load-bearing: without it the affine map is
+    strictly increasing in h, so every permutation's argmin collapses
+    to the doc's single smallest shingle hash — 32 "independent" hash
+    functions degenerate to one, and band collisions fire
+    all-or-nothing per pair instead of following the 1-(1-J⁴)⁸ S-curve
+    (caught round 7 by an anti-correlation probe: a concat doc A+B
+    could never band-match A on one band and B on another)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -601,25 +565,17 @@ def minhash_signatures_np(
         + [T.StructField(f"mh{i}", T.LongType()) for i in range(num_hashes)]
     )
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for k, hs in zip(pdf[key], pdf["hashes"]):
-                h = np.asarray(hs, dtype=np.int64) % _P31
-                if h.size == 0:
-                    # mirror the aggregate form exactly: a doc with no
-                    # shingles produces no exploded rows, hence NO
-                    # signature row (and min() over empty would throw)
-                    continue
-                sig = ((h[:, None] * a[None, :] + b[None, :]) % _P31).min(axis=0)
-                rows.append((k, *sig.tolist()))
-            if not rows:
-                continue
-            yield pd.DataFrame(rows, columns=[key] + [f"mh{i}" for i in range(num_hashes)])
+    def signature(k, hs):
+        h = np.asarray(hs, dtype=np.int64) % _P31
+        # a doc with no shingles gets NO signature row, exactly as in
+        # the aggregate form (and min() over empty would throw)
+        if h.size:
+            sig = ((h[:, None] * a[None, :] + b[None, :]) % _P31).min(axis=0)
+            yield (k, *sig.tolist())
 
     wh = exploded_word_hashes(df, text_col, keep=(key,))
     hashed = wh.select(key, shingle_hashes_col("wh").alias("hashes"))
-    return hashed.mapInPandas(fn, schema=out_schema)
+    return map_rows(hashed, signature, out_schema)
 
 
 @register(

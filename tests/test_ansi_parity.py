@@ -40,15 +40,17 @@ def test_injected_overflow_canary_throws_under_ansi(ansi_on):
 
 
 def test_minhash_signatures_identical_under_both_ansi_settings(spark, sf_dir):
-    from firstamerican_etl_spark.plans.dedupplans import minhash_signatures
+    """The production signature path: its JVM-side shingle hashing is
+    what an ANSI-on session could break."""
+    from firstamerican_etl_spark.plans.dedupplans import minhash_signatures_np
     from firstamerican_etl_spark.sources.io import load_table
 
     d = load_table(spark, sf_dir, "documents").limit(50)
-    off = sorted(map(tuple, minhash_signatures(d).collect()))
+    off = sorted(map(tuple, minhash_signatures_np(d).collect()))
     old = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
-        on = sorted(map(tuple, minhash_signatures(d).collect()))
+        on = sorted(map(tuple, minhash_signatures_np(d).collect()))
     finally:
         spark.conf.set("spark.sql.ansi.enabled", old)
     assert off == on
@@ -69,19 +71,19 @@ def test_short_docs_survive_minhash_under_ansi(ansi_on):
     """Docs with fewer than shingle_len words have NO shingles — they
     must yield zero signature/band rows, not an INVALID_ARRAY_INDEX
     error under the driver's ANSI-on session (the old pseudo-shingle
-    floor ran element_at past the array end; minhash_signatures had no
-    pre-filter)."""
+    floor ran element_at past the array end; the JVM signature form had
+    no pre-filter)."""
     spark = ansi_on
     from firstamerican_etl_spark.plans.dedupplans import (
         minhash_bands,
-        minhash_signatures,
+        minhash_signatures_np,
     )
 
     docs = spark.createDataFrame(
         [(1, ""), (2, "one two"), (3, "a b c d e f g h")],
         "doc_id long, text string",
     )
-    sigs = minhash_signatures(docs).collect()
+    sigs = minhash_signatures_np(docs).collect()
     assert sorted(r["doc_id"] for r in sigs) == [3]  # only the long doc
     bands = minhash_bands(docs).collect()
     assert {r["doc_id"] for r in bands} == {3}

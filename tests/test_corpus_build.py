@@ -447,17 +447,27 @@ def test_force_compact_resolves_loser_mediated_bridge(spark, tmp_path):
 def test_failed_compaction_promotion_restores_the_corpus(spark, tmp_path, monkeypatch):
     """compact_corpus's swap: a promotion rename that fails after the
     live corpus was parked must put it back with its ``_index``
-    sidecar, propagate the error and leave no sibling generation."""
+    sidecar, propagate the error and leave no sibling generation. The
+    loser-bridge fixture makes the compaction drop written docs, so it
+    really reaches promotion."""
     import os
 
-    from firstamerican_etl_spark.pipeline.corpus_build import compact_corpus
+    from firstamerican_etl_spark.pipeline.corpus_build import (
+        build_corpus_delta,
+        compact_corpus,
+    )
 
     a = "was would into know not could use its no him way have"
+    a2 = "was would into know not could use its no him way had"
     b = "make some your his more have than than up use been down"
     out = str(tmp_path / "corpus")
-    docs = spark.createDataFrame([(1, a, "en"), (2, b, "en")],
-                                 ["doc_id", "text", "lang"])
+    docs = spark.createDataFrame(
+        [(1, a, "en"), (2, a2, "en"), (5, b, "en")], ["doc_id", "text", "lang"]
+    )
     build_corpus(spark, docs, out, token_budget=BUDGET, min_tokens=5)
+    delta = spark.createDataFrame([(100, a2 + " " + b, "en")],
+                                  ["doc_id", "text", "lang"])
+    build_corpus_delta(spark, delta, out, token_budget=BUDGET, min_tokens=5)
     n0 = spark.read.parquet(out).count()
 
     real_rename = os.rename
@@ -478,3 +488,30 @@ def test_failed_compaction_promotion_restores_the_corpus(spark, tmp_path, monkey
     assert spark.read.parquet(out).count() == n0
     assert os.path.isdir(os.path.join(out, "_index"))
     assert os.listdir(tmp_path) == ["corpus"]
+
+
+@pytest.mark.parametrize("with_loser", [False, True])
+def test_force_compact_skips_a_corpus_it_would_not_change(
+    spark, tmp_path, monkeypatch, with_loser
+):
+    """A force compaction that drops no WRITTEN doc rewrites nothing:
+    neither a clean corpus nor one whose full-graph drop list holds
+    only a build-time loser (A2, never written) reaches replace_dir."""
+    from firstamerican_etl_spark.pipeline import corpus_build
+
+    a = "was would into know not could use its no him way have"
+    a2 = "was would into know not could use its no him way had"
+    b = "make some your his more have than than up use been down"
+    rows = [(1, a, "en"), (5, b, "en")] + ([(2, a2, "en")] if with_loser else [])
+    out = str(tmp_path / "clean")
+    docs = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
+    build_corpus(spark, docs, out, token_budget=BUDGET, min_tokens=5)
+    written = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    assert written == {1, 5}  # A2 lost to its near-dup A at build time
+
+    def no_swap(path, write_fn):
+        raise AssertionError("compact_corpus rewrote an unchanged corpus")
+
+    monkeypatch.setattr(corpus_build, "replace_dir", no_swap)
+    assert corpus_build.compact_corpus(spark, out, force=True) == 0
+    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == written

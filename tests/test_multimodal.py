@@ -83,18 +83,41 @@ def test_real_decoder_gated(assets):
         decode_image_real(assets)
 
 
+def _minhash_signatures_jvm(df, num_hashes: int = 32):
+    """The JVM MinHash form, kept as the parity reference: explode the
+    shingle hashes to rows and take ``min(((h mod p)·a + b) mod p)`` as
+    32 codegen'd aggregates per doc (one doc shuffle). A doc with no
+    shingles explodes to no rows, hence no signature row."""
+    from firstamerican_etl_spark.plans.dedupplans import (
+        _P31,
+        _perm_consts,
+        exploded_word_hashes,
+        shingle_hashes_col,
+    )
+
+    exploded = exploded_word_hashes(df).select(
+        "doc_id", F.explode(shingle_hashes_col("wh")).alias("h")
+    ).select("doc_id", F.pmod(F.col("h"), F.lit(_P31)).alias("hp"))
+    aggs = []
+    for i in range(num_hashes):
+        a, b = _perm_consts(i)
+        aggs.append(
+            F.min(
+                F.pmod(F.col("hp") * F.lit(a) + F.lit(b), F.lit(_P31))
+            ).alias(f"mh{i}")
+        )
+    return exploded.groupBy("doc_id").agg(*aggs)
+
+
 def test_minhash_np_variant_equals_jvm(spark, sf_dir):
     """The Arrow/numpy MinHash path must produce bit-identical
     signatures to the codegen'd aggregate formulation (int64 wraparound
     parity)."""
-    from firstamerican_etl_spark.plans.dedupplans import (
-        minhash_signatures,
-        minhash_signatures_np,
-    )
+    from firstamerican_etl_spark.plans.dedupplans import minhash_signatures_np
     from firstamerican_etl_spark.sources.io import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    s_jvm = sorted(map(tuple, minhash_signatures(d).collect()))
+    s_jvm = sorted(map(tuple, _minhash_signatures_jvm(d).collect()))
     s_np = sorted(map(tuple, minhash_signatures_np(d).collect()))
     assert s_jvm == s_np
 

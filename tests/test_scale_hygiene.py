@@ -76,7 +76,7 @@ ARROW_PYTHON_OK = {
     "dedup_simhash_pairs",  # consumes the fingerprint pass above
     # r15: MinHash signatures via the numpy permutation-min path
     # (bit-identical to the JVM aggregates — parity pinned by
-    # test_multimodal/test_ansi_parity; −24% on the LSH pipeline)
+    # test_multimodal; −24% on the LSH pipeline)
     "dedup_minhash_lsh",
 }
 
@@ -228,6 +228,39 @@ def test_on_disk_commits_have_one_copy_each():
         ("sources/io.py", "replace_dir"),
         ("sources/io.py", "publish_file"),
     }
+
+
+#: Python kernel stages that stay direct calls instead of going
+#: through operators/kernels.map_rows, each with why.
+DIRECT_PYTHON_KERNELS = {
+    ("operators/scale.py", "global_row_index"): "carries counts across batches",
+    ("operators/scale.py", "global_running_sum"): "carries sums across batches",
+    ("plans/vectorplans.py", "embedding_gram_matrix"): "carries a partial across batches",
+    ("plans/timeseriesplans.py", "rolling_7d_median_bucketed"): "buffers a whole partition",
+    ("plans/dedupplans.py", "dedup_simhash"): "vectorizes over the whole batch",
+    ("plans/vectorplans.py", "pq_adc_topk"): "vectorizes over the whole batch",
+    ("plans/arrayplans.py", "weighted_median_udaf"): "grouped",
+    ("plans/vectorplans.py", "_semdedup"): "grouped",
+    ("plans/vectorplans.py", "semdedup_threshold_sweep"): "grouped",
+    ("plans/vectorplans.py", "dedup_embedding_cosine_vectorized"): "grouped",
+    ("plans/multimodalplans.py", "corpus_byte_histogram"): "reads Arrow buffers directly",
+}
+
+
+def test_python_kernels_have_one_boundary():
+    """Every per-row Python kernel runs through operators/kernels.
+    map_rows, which owns the batch loop; the only other mapInPandas /
+    applyInPandas / mapInArrow callers are DIRECT_PYTHON_KERNELS."""
+    import ast
+
+    names = {"mapInPandas", "applyInPandas", "mapInArrow"}
+
+    def _uses(node) -> bool:
+        return isinstance(node, ast.Attribute) and node.attr in names
+
+    assert _holders(_uses) == {("operators/kernels.py", "map_rows")} | set(
+        DIRECT_PYTHON_KERNELS
+    )
 
 
 def _package_functions():
