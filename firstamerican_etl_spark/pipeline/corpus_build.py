@@ -13,14 +13,15 @@ module only composes them):
                     doc_id of each near-dup cluster
 4. quality gate   — Gopher-style bounds: token count, char length,
                     alphabetic-token fraction
-5. PII redaction  — email/URL placeholder substitution (same patterns
-                    as the text_redact_pii operator)
+5. PII redaction  — email/URL placeholder substitution
+                    (textplans.redact_pii, the oracled text_redact_pii
+                    query's expression)
 6. sequence pack  — distributed prefix-sum over token counts
                     (operators/scale.global_running_sum), bin id =
                     floor(token_offset / budget)
 7. split assign   — deterministic md5 hash-range 90/5/5
-                    train/val/test, reproducible under any
-                    partitioning/retry
+                    train/val/test (trainplans.split_col), reproducible
+                    under any partitioning/retry
 8. write          — parquet partitioned by split (train readers scan
                     only their split's files)
 
@@ -41,7 +42,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from firstamerican_etl_spark.operators.graph import connected_components
@@ -54,13 +55,20 @@ from firstamerican_etl_spark.plans.dedupplans import (
     MINHASH_SCHEME_VERSION,
     minhash_bands,
     minhash_lsh_pairs_from_bands,
+    span_cut_clean,
 )
+from firstamerican_etl_spark.plans.textplans import redact_pii
+from firstamerican_etl_spark.plans.trainplans import dsir_logweights, split_col
 from firstamerican_etl_spark.sources.io import replace_dir
 
-_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_URL_RE = r"https?://[^\s]+"
-
 log = logging.getLogger("corpus_build")
+
+#: Index-sidecar layouts, fixed by the writers in this module. Reads
+#: declare them: the scheme stamp already fail-louds a cross-version
+#: index, and schema inference only added one footer-read driver job
+#: per read (r15, measured in the job trace).
+_FP_SCHEMA = "_fp string, doc_id bigint"
+_BANDS_SCHEMA = "doc_id bigint, band_id int, band_hash bigint"
 
 
 def _index_dir(out_dir: str) -> str:
@@ -145,6 +153,97 @@ class CorpusBuildStats:
     n_bridged_components: int = 0
 
 
+# Stage helpers shared by build_corpus and build_corpus_delta: the delta
+# runs the same cascade on a new batch, so each stage has one copy.
+
+
+def _counted_checkpoint(df: DataFrame, name: str) -> tuple[DataFrame, int]:
+    """Materialize ``df`` (eager localCheckpoint) and return it with its
+    row count. The count is an OBSERVED METRIC fired by the checkpoint
+    action itself, not a dedicated count() job."""
+    obs = Observation(name)
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return df, int(obs.get["n"])
+
+
+def _keep_min_per_fp(normed: DataFrame, name: str) -> tuple[DataFrame, int]:
+    """Exact dedup: keep the min doc_id per ``_fp`` fingerprint.
+
+    _fp RIDES THE CHECKPOINT: the index sidecar needs (fp, keeper)
+    rows, and deriving them from the un-checkpointed keep-min frame
+    would re-run normalize+md5+groupBy over the RAW input, one full
+    extra scan just to persist a narrow table. Survivor rows are one
+    per fingerprint, so select(_fp, doc_id) of the result IS the
+    keep-min frame."""
+    keep = normed.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
+    return _counted_checkpoint(normed.join(keep, ["_fp", "doc_id"]), name)
+
+
+def _near_losers(labels: DataFrame) -> DataFrame:
+    """Docs whose component label is not their own id: redundant
+    near-dups under the keep-the-min rule."""
+    return labels.filter(F.col("node") != F.col("label")).select(
+        F.col("node").alias("doc_id")
+    )
+
+
+def _drop_near_losers(
+    exact: DataFrame, labels: DataFrame, name: str
+) -> tuple[DataFrame, int]:
+    """Near dedup: anti-join the component losers out of ``exact``.
+
+    The near-survivor checkpoint STAYS (r14 note): an elision variant
+    (observation riding the prefix-sum staging write) was measured
+    slightly SLOWER at sf0.1 (build min 4.49 → 4.84 s in-process,
+    confirmed by a bench --only A/B) — the saved materialization pass
+    did not pay for the wider staging-write plan."""
+    return _counted_checkpoint(
+        exact.join(_near_losers(labels), "doc_id", "left_anti"), name
+    )
+
+
+def _quality_gate(
+    df: DataFrame, min_tokens: int, max_chars: int, min_alpha_frac: float
+) -> DataFrame:
+    """Gopher-style bounds, all scan-side expressions: token count,
+    char length, alphabetic-token fraction."""
+    toks = F.split(F.col("text"), " ", -1)
+    alpha_frac = (
+        F.size(F.filter(toks, lambda w: w.rlike("^[A-Za-z]+$")))
+        / F.greatest(F.size(toks), F.lit(1))
+    )
+    return df.filter(
+        (F.size(toks) >= min_tokens)
+        & (F.length("text") <= max_chars)
+        & (alpha_frac >= min_alpha_frac)
+    )
+
+
+def _pack_and_split(df: DataFrame, token_budget: int) -> DataFrame:
+    """Sequence packing via the distributed prefix sum (bin id =
+    floor(token_offset / budget)), then the deterministic 90/5/5
+    hash-range split of trainplans.split_col."""
+    with_tok = df.withColumn("n_tokens", F.size(F.split("text", " ", -1)))
+    return (
+        global_running_sum(with_tok, "doc_id", "n_tokens", out_col="_run_tok")
+        .withColumn(
+            "bin_id",
+            F.floor((F.col("_run_tok") - F.col("n_tokens")) / float(token_budget)),
+        )
+        .drop("_run_tok")
+        .withColumn("split", split_col(F.col("doc_id")))
+    )
+
+
+def _split_counts() -> list:
+    """Per-split row sums, observed on the corpus write action (no
+    re-read of the output for counts)."""
+    return [
+        F.sum(F.when(F.col("split") == s, 1).otherwise(0)).alias(f"n_{s}")
+        for s in ("train", "val", "test")
+    ]
+
+
 def build_corpus(
     spark: SparkSession,
     docs: DataFrame,
@@ -168,8 +267,6 @@ def build_corpus(
     composed plan)."""
     if output_format not in ("parquet", "jsonl"):
         raise ValueError(f"unsupported output_format: {output_format!r}")
-    from pyspark.sql import Observation
-
     t0 = time.perf_counter()
 
     # Diagnostic counts ride along as OBSERVED METRICS
@@ -194,21 +291,8 @@ def build_corpus(
     normed = docs.observe(obs_raw, F.count(F.lit(1)).alias("n")).withColumn(
         "_fp", F.md5(_NORM(F.col("text")))
     )
-    keep_exact = normed.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
-    obs_exact = Observation("corpus_exact")
-    # _fp RIDES THE CHECKPOINT: the index sidecar needs (fp, keeper)
-    # rows, and deriving them from the un-checkpointed keep_exact
-    # would re-run normalize+md5+groupBy over the RAW corpus — one
-    # full extra scan just to persist a narrow table (the exact
-    # re-pass the delta path already avoids). Survivor rows are one
-    # per fingerprint, so exact.select(_fp, doc_id) IS keep_exact.
-    exact_fp = (
-        normed.join(keep_exact, ["_fp", "doc_id"])
-        .observe(obs_exact, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
+    exact_fp, n_after_exact = _keep_min_per_fp(normed, "corpus_exact")
     exact = exact_fp.drop("_fp")
-    n_after_exact = int(obs_exact.get["n"])
 
     # 3: near-dup clustering on the exact survivors; a doc whose
     # component label differs from its own id is a redundant near-dup.
@@ -218,23 +302,9 @@ def build_corpus(
     # materialization, |docs|·8 narrow rows.
     bands = minhash_bands(exact).localCheckpoint(eager=True)
     pairs = minhash_lsh_pairs_from_bands(bands).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
-    losers = labels.filter(F.col("node") != F.col("label")).select(
-        F.col("node").alias("doc_id")
+    near, n_after_near = _drop_near_losers(
+        exact, connected_components(pairs), "corpus_near"
     )
-    obs_near = Observation("corpus_near")
-    # The near-survivor checkpoint STAYS (r14 note): an elision variant
-    # (observation riding the prefix-sum staging write) was measured
-    # slightly SLOWER at sf0.1 (build min 4.49 → 4.84 s in-process,
-    # confirmed by a bench --only A/B) — the saved materialization pass
-    # did not pay for the wider staging-write plan. Kept as the r13
-    # shape; the threaded tail sinks below are the r14 win here.
-    near = (
-        exact.join(losers, "doc_id", "left_anti")
-        .observe(obs_near, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_after_near = int(obs_near.get["n"])
 
     # 3.5 (optional): duplicate-SPAN removal (arXiv:2107.06499 §3.1) on
     # the whole-doc survivors — excises duplicated 8-token runs that
@@ -244,8 +314,6 @@ def build_corpus(
     # survivors, not the re-derived dedup cascade; docs cut down below
     # min_tokens fall to the quality gate next.
     if span_cut:
-        from firstamerican_etl_spark.plans.dedupplans import span_cut_clean
-
         cleaned = span_cut_clean(near).select(
             "doc_id", F.col("text_clean").alias("_text_clean")
         )
@@ -256,28 +324,13 @@ def build_corpus(
             .localCheckpoint(eager=True)
         )
 
-    # 4: quality gate (Gopher-style bounds, all scan-side expressions)
-    toks = F.split(F.col("text"), " ", -1)
-    alpha_frac = (
-        F.size(F.filter(toks, lambda w: w.rlike("^[A-Za-z]+$")))
-        / F.greatest(F.size(toks), F.lit(1))
-    )
-    quality = near.filter(
-        (F.size(toks) >= min_tokens)
-        & (F.length("text") <= max_chars)
-        & (alpha_frac >= min_alpha_frac)
-    ).observe(obs_quality, F.count(F.lit(1)).alias("n"))
-    # the quality count fires on the prefix-sum's staging write below —
-    # no dedicated pass over the survivors
-
-    # 5: PII redaction (placeholder substitution, pure map)
-    redacted = quality.withColumn(
-        "text",
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _EMAIL_RE, "<EMAIL>"),
-            _URL_RE,
-            "<URL>",
-        ),
+    # 4+5: quality gate, then PII redaction (placeholder substitution,
+    # pure map). The quality count fires on the prefix-sum's staging
+    # write below — no dedicated pass over the survivors.
+    redacted = (
+        _quality_gate(near, min_tokens, max_chars, min_alpha_frac)
+        .observe(obs_quality, F.count(F.lit(1)).alias("n"))
+        .withColumn("text", redact_pii(F.col("text")))
     )
 
     # 5.5 (optional): DSIR importance weights against a target-language
@@ -287,8 +340,6 @@ def build_corpus(
     # ≤256 rows (see plans/trainplans.dsir_logweights). Docs without
     # bigram evidence (<2 words) weight 0.
     if weight_target_lang is not None:
-        from firstamerican_etl_spark.plans.trainplans import dsir_logweights
-
         if "lang" not in redacted.columns:
             raise ValueError(
                 "weight_target_lang requires a 'lang' column on the input docs"
@@ -301,31 +352,11 @@ def build_corpus(
             F.coalesce(F.col("logweight_scaled"), F.lit(0).cast("long")),
         )
 
-    # 6: sequence packing via the distributed prefix sum
-    with_tok = redacted.withColumn("n_tokens", F.size(F.split("text", " ", -1)))
-    packed = global_running_sum(
-        with_tok, "doc_id", "n_tokens", out_col="_run_tok"
-    ).withColumn(
-        "bin_id",
-        F.floor((F.col("_run_tok") - F.col("n_tokens")) / float(token_budget)),
-    ).drop("_run_tok")
-
-    # 7: deterministic hash-range split (90/5/5 by md5 prefix)
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    packed = packed.withColumn(
-        "split",
-        F.when(bucket < "e6", "train")  # 230/256 ≈ 0.898
-        .when(bucket < "f3", "val")  # 13/256 ≈ 0.051
-        .otherwise("test"),
-    )
-
-    # 8: write partitioned by split; the write action fires the
-    # per-split observed sums (no re-read of the output for counts)
-    observed = packed.observe(
-        obs_split,
-        F.sum(F.when(F.col("split") == "train", 1).otherwise(0)).alias("n_train"),
-        F.sum(F.when(F.col("split") == "val", 1).otherwise(0)).alias("n_val"),
-        F.sum(F.when(F.col("split") == "test", 1).otherwise(0)).alias("n_test"),
+    # 6+7: sequence packing + split assign; 8: write partitioned by
+    # split (train readers scan only their split's files), the write
+    # action firing the per-split observed sums
+    observed = _pack_and_split(redacted, token_budget).observe(
+        obs_split, *_split_counts()
     )
     writer = observed.write.mode("overwrite").partitionBy("split")
     if output_format == "jsonl":
@@ -461,17 +492,8 @@ def build_corpus_delta(
             "rebuild full with parquet output (or refresh full in jsonl)"
         )
     _check_scheme_stamp(spark, idx)
-    # Explicit schemas for the index sidecar frames (r15, guide §2.6):
-    # these layouts are fixed by the writers in this module, and the
-    # scheme stamp above already fail-louds any cross-version index —
-    # schema inference here only added one footer-read driver job per
-    # frame at the head of every delta (measured in the job trace).
-    idx_fp = spark.read.schema("_fp string, doc_id bigint").parquet(fp_path)
-    idx_bands = spark.read.schema(
-        "doc_id bigint, band_id int, band_hash bigint"
-    ).parquet(bands_path)
-
-    from pyspark.sql import Observation
+    idx_fp = spark.read.schema(_FP_SCHEMA).parquet(fp_path)
+    idx_bands = spark.read.schema(_BANDS_SCHEMA).parquet(bands_path)
 
     # The delta is ACTION-FLOOR-bound at small batch sizes (~14 fixed
     # driver round-trips; SCALING.md's crossover note) — so actions
@@ -506,25 +528,15 @@ def build_corpus_delta(
         )
 
     normed = new_docs.withColumn("_fp", F.md5(_NORM(F.col("text"))))
-    # exact: drop fps already in the corpus, then keep-min within batch
-    fresh = normed.join(
-        idx_fp.select("_fp").distinct(), "_fp", "left_anti"
-    )
-    keep_exact = fresh.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
+    # exact: drop fps already in the corpus, then keep-min within batch.
     # _fp stays on the checkpointed frame so the index-sidecar write at
     # the end reads the cached rows instead of recomputing the
     # fresh-join (the final select(*existing.columns) strips it from
-    # the corpus output). Stage counts ride the checkpoint actions as
-    # OBSERVED METRICS (the full build's no-extra-pass discipline) —
-    # the delta used to burn one count() job per stage on top of each
-    # checkpoint.
-    obs_exact = Observation("delta_exact")
-    exact = (
-        fresh.join(keep_exact, ["_fp", "doc_id"])
-        .observe(obs_exact, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    # the corpus output).
+    fresh = normed.join(
+        idx_fp.select("_fp").distinct(), "_fp", "left_anti"
     )
-    n_after_exact = int(obs_exact.get["n"])
+    exact, n_after_exact = _keep_min_per_fp(fresh, "delta_exact")
 
     # near: within-batch pairs ∪ cross pairs against the indexed bands
     # (one signature pass: both pair generators read the checkpointed
@@ -564,152 +576,80 @@ def build_corpus_delta(
     # aborted batch must never record bridges it never shipped.
     def _bridge_audit():
         written_ids = existing.select(F.col("doc_id").alias("node")).distinct()
-        obs_bridge = Observation("delta_bridge")
-        bridged = (
+        bridged, n = _counted_checkpoint(
             labels.filter(F.col("node") <= F.lit(max_indexed))
             .join(written_ids, "node")
             .groupBy("label")
             .agg(F.count_distinct("node").alias("n_indexed_survivors"))
-            .filter(F.col("n_indexed_survivors") >= 2)
-            .observe(obs_bridge, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .filter(F.col("n_indexed_survivors") >= 2),
+            "delta_bridge",
         )
-        return int(obs_bridge.get["n"]), bridged
+        return n, bridged
 
-    # Not concurrent_actions: the audit is a background future that the
-    # tail awaits only after commit, and it is cancelled on error.
+    # Not concurrent_actions: the audit is a background future that is
+    # awaited only after commit, and it is cancelled on error.
     from concurrent.futures import ThreadPoolExecutor
 
     audit_pool = ThreadPoolExecutor(max_workers=1)
     try:
         f_bridge = audit_pool.submit(_bridge_audit)
-        return _delta_tail(
-            spark, exact, labels, existing, batch_bands, f_bridge,
-            out_dir, idx, fp_path, bands_path,
-            min_tokens, max_chars, min_alpha_frac, token_budget,
-            bin_base, n_raw, n_after_exact, t0,
-        )
-    finally:
-        # an exception anywhere above/inside the tail must not leave
-        # the audit thread running (nor delay the error until it
-        # finishes); the deferred record write happens only on the
-        # success path inside the tail
-        audit_pool.shutdown(wait=False, cancel_futures=True)
-
-
-def _delta_tail(
-    spark, exact, labels, existing, batch_bands, f_bridge,
-    out_dir, idx, fp_path, bands_path,
-    min_tokens, max_chars, min_alpha_frac, token_budget,
-    bin_base, n_raw, n_after_exact, t0,
-) -> CorpusBuildStats:
-    """Loser drop → quality → redact → pack → commit for the delta
-    (split out of build_corpus_delta so the audit thread's lifecycle
-    wraps it in one try/finally)."""
-    from pyspark.sql import Observation
-
-    losers = labels.filter(F.col("node") != F.col("label")).select(
-        F.col("node").alias("doc_id")
-    )
-    obs_near = Observation("delta_near")
-    # checkpoints kept (r14 note): the elision variant (observations
-    # riding the prefix-sum staging write) measured slightly slower at
-    # sf0.1 — see the full build's near-checkpoint comment.
-    near = (
-        exact.join(losers, "doc_id", "left_anti")
-        .observe(obs_near, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_after_near = int(obs_near.get["n"])
-
-    # quality gate + redaction: same expressions as the full build
-    toks = F.split(F.col("text"), " ", -1)
-    alpha_frac = (
-        F.size(F.filter(toks, lambda w: w.rlike("^[A-Za-z]+$")))
-        / F.greatest(F.size(toks), F.lit(1))
-    )
-    quality = near.filter(
-        (F.size(toks) >= min_tokens)
-        & (F.length("text") <= max_chars)
-        & (alpha_frac >= min_alpha_frac)
-    )
-    obs_quality = Observation("delta_quality")
-    redacted = (
-        quality.withColumn(
-            "text",
-            F.regexp_replace(
-                F.regexp_replace(F.col("text"), _EMAIL_RE, "<EMAIL>"),
-                _URL_RE,
-                "<URL>",
+        near, n_after_near = _drop_near_losers(exact, labels, "delta_near")
+        redacted, n_after_quality = _counted_checkpoint(
+            _quality_gate(near, min_tokens, max_chars, min_alpha_frac).withColumn(
+                "text", redact_pii(F.col("text"))
             ),
+            "delta_quality",
         )
-        .observe(obs_quality, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_after_quality = int(obs_quality.get["n"])
-
-    # pack into fresh bins after the existing corpus's max bin_id
-    # (bin_base came from the concurrent preflight aggregate — a
-    # column-pruned scan of one int column, not a corpus re-read)
-    with_tok = redacted.withColumn("n_tokens", F.size(F.split("text", " ", -1)))
-    packed = global_running_sum(
-        with_tok, "doc_id", "n_tokens", out_col="_run_tok"
-    ).withColumn(
-        "bin_id",
-        F.floor((F.col("_run_tok") - F.col("n_tokens")) / float(token_budget))
-        + F.lit(bin_base),
-    ).drop("_run_tok")
-
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    packed = packed.withColumn(
-        "split",
-        F.when(bucket < "e6", "train")
-        .when(bucket < "f3", "val")
-        .otherwise("test"),
-    )
-    # align delta columns to the existing corpus schema (a full build
-    # may carry extra columns like logweight_scaled; the delta cannot
-    # compute corpus-global weights, so those builds must refresh full)
-    extra = set(existing.columns) - set(packed.columns)
-    if extra:
-        raise ValueError(
-            f"existing corpus carries corpus-global columns {sorted(extra)} "
-            "a delta cannot compute (e.g. DSIR weights) — rebuild full"
+        # pack into fresh bins after the existing corpus's max bin_id
+        # (bin_base came from the concurrent preflight aggregate — a
+        # column-pruned scan of one int column, not a corpus re-read)
+        packed = _pack_and_split(redacted, token_budget).withColumn(
+            "bin_id", F.col("bin_id") + F.lit(bin_base)
         )
-    packed = packed.select(*existing.columns)
-    # one observation on the write action carries all four diagnostics
-    # (same no-extra-pass discipline as the full build)
-    obs = Observation("delta_split")
-    observed = packed.observe(
-        obs,
-        F.sum(F.when(F.col("split") == "train", 1).otherwise(0)).alias("n_train"),
-        F.sum(F.when(F.col("split") == "val", 1).otherwise(0)).alias("n_val"),
-        F.sum(F.when(F.col("split") == "test", 1).otherwise(0)).alias("n_test"),
-        F.size(F.collect_set("bin_id")).alias("n_bins"),
-    )
-    # THREE independent sinks (corpus append + the two index-sidecar
-    # appends, all reading cached/checkpointed frames) commit on
-    # concurrent driver threads; obs.get blocks until the corpus
-    # write's own action fires.
-    concurrent_actions(
-        lambda: observed.write.mode("append").partitionBy("split").parquet(out_dir),
-        lambda: exact.select("_fp", "doc_id").write.mode("append").parquet(fp_path),
-        lambda: batch_bands.write.mode("append").parquet(bands_path),
-    )
-    row = obs.get
-    # the corpus + sidecar writes committed — NOW the bridge record
-    # may land (an aborted batch never records phantom bridges)
-    n_bridged, bridged_df = f_bridge.result()
-    if n_bridged:
-        log.warning(
-            "delta batch bridged %d previously-disconnected indexed "
-            "component(s) — output diverges from a full rebuild until "
-            "a compaction pass; bridged labels recorded in %s",
-            n_bridged, os.path.join(idx, "bridged_components"),
+        # align delta columns to the existing corpus schema (a full
+        # build may carry extra columns like logweight_scaled; the
+        # delta cannot compute corpus-global weights, so those builds
+        # must refresh full)
+        extra = set(existing.columns) - set(packed.columns)
+        if extra:
+            raise ValueError(
+                f"existing corpus carries corpus-global columns {sorted(extra)} "
+                "a delta cannot compute (e.g. DSIR weights) — rebuild full"
+            )
+        # one observation on the write action carries all four
+        # diagnostics (same no-extra-pass discipline as the full build)
+        obs = Observation("delta_split")
+        observed = packed.select(*existing.columns).observe(
+            obs, *_split_counts(), F.size(F.collect_set("bin_id")).alias("n_bins")
         )
-        bridged_df.write.mode("append").parquet(
-            os.path.join(idx, "bridged_components")
+        # THREE independent sinks (corpus append + the two index-sidecar
+        # appends, all reading cached/checkpointed frames) commit on
+        # concurrent driver threads; obs.get blocks until the corpus
+        # write's own action fires.
+        concurrent_actions(
+            lambda: observed.write.mode("append").partitionBy("split").parquet(out_dir),
+            lambda: exact.select("_fp", "doc_id").write.mode("append").parquet(fp_path),
+            lambda: batch_bands.write.mode("append").parquet(bands_path),
         )
+        row = obs.get
+        # the corpus + sidecar writes committed — NOW the bridge record
+        # may land (an aborted batch never records phantom bridges)
+        n_bridged, bridged_df = f_bridge.result()
+        if n_bridged:
+            log.warning(
+                "delta batch bridged %d previously-disconnected indexed "
+                "component(s) — output diverges from a full rebuild until "
+                "a compaction pass; bridged labels recorded in %s",
+                n_bridged, os.path.join(idx, "bridged_components"),
+            )
+            bridged_df.write.mode("append").parquet(
+                os.path.join(idx, "bridged_components")
+            )
+    finally:
+        # an exception anywhere above must not leave the audit thread
+        # running (nor delay the error until it finishes); the deferred
+        # record write happens only on the success path
+        audit_pool.shutdown(wait=False, cancel_futures=True)
 
     return CorpusBuildStats(
         n_raw=n_raw,
@@ -778,16 +718,13 @@ def compact_corpus(
     bridged_path = os.path.join(idx, "bridged_components")
     if not os.path.isdir(bridged_path) and not force:
         return 0
-    bands = spark.read.parquet(os.path.join(idx, "bands"))
+    bands = spark.read.schema(_BANDS_SCHEMA).parquet(os.path.join(idx, "bands"))
     pairs = minhash_lsh_pairs_from_bands(bands).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
     # full-graph rule, independent of the recorded labels: any written
     # doc that is not its component min would not exist after a
     # rebuild (covers unrecorded loser-mediated bridges, and recorded
     # labels that a delta-restricted graph numbered differently)
-    drop = labels.filter(F.col("node") != F.col("label")).select(
-        F.col("node").alias("doc_id")
-    )
+    drop = _near_losers(connected_components(pairs))
     existing = spark.read.parquet(out_dir)
     # count only WRITTEN docs: the drop list also holds build-time
     # losers that never reached the corpus, so a non-empty drop list

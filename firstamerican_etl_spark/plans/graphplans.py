@@ -361,6 +361,23 @@ LIMIT 20
 """
 
 
+def _top_triangle_nodes(tri: DataFrame) -> DataFrame:
+    """Top-20 nodes by triangle participation, from one (a, b, c) row
+    per triangle: each triangle counts once for each of its nodes."""
+    nodes = (
+        tri.select(F.col("a").alias("node"))
+        .unionAll(tri.select(F.col("b").alias("node")))
+        .unionAll(tri.select(F.col("c").alias("node")))
+    )
+    return (
+        nodes.groupBy("node")
+        .agg(F.count(F.lit(1)).alias("n_triangles"))
+        .orderBy(F.col("n_triangles").desc(), "node")
+        .limit(20)
+        .select(F.col("node").cast("long").alias("node"), "n_triangles")
+    )
+
+
 @register(
     "graph_triangle_count",
     # ONE oracle for all three triangle plans (the triangle set is
@@ -421,18 +438,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e2.v").alias("c"),
         )
     )
-    nodes = (
-        tri.select(F.col("a").alias("node"))
-        .unionAll(tri.select(F.col("b").alias("node")))
-        .unionAll(tri.select(F.col("c").alias("node")))
-    )
-    return (
-        nodes.groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-        .orderBy(F.col("n_triangles").desc(), "node")
-        .limit(20)
-        .select(F.col("node").cast("long").alias("node"), "n_triangles")
-    )
+    return _top_triangle_nodes(tri)
 
 
 def _degree_oriented_triangles(edges: DataFrame) -> DataFrame:
@@ -490,18 +496,7 @@ def _degree_oriented_triangles(edges: DataFrame) -> DataFrame:
             F.col("o2.dst").alias("c"),
         )
     )
-    nodes = (
-        tri.select(F.col("a").alias("node"))
-        .unionAll(tri.select(F.col("b").alias("node")))
-        .unionAll(tri.select(F.col("c").alias("node")))
-    )
-    return (
-        nodes.groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-        .orderBy(F.col("n_triangles").desc(), "node")
-        .limit(20)
-        .select(F.col("node").cast("long").alias("node"), "n_triangles")
-    )
+    return _top_triangle_nodes(tri)
 
 
 @register(

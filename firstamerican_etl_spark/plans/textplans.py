@@ -7,7 +7,7 @@ JVM-side, codegen'd, no Python UDFs in the hot path — so they scale to
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from firstamerican_etl_spark.functions.stable import stable_round
@@ -256,6 +256,23 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_bigrams(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """(doc_id, ``name``) rows, one per word bigram of every document
+    with >= 2 words, materialized map-side (explode of an index
+    transform over the bound words array)."""
+    from firstamerican_etl_spark.plans.dedupplans import exploded_words
+
+    d = exploded_words(load_table(spark, sf_dir, "documents"))
+    n = F.size("words")
+    bigrams = F.transform(
+        F.sequence(F.lit(1), n - 1),
+        lambda i: F.concat_ws(
+            " ", F.element_at(F.col("words"), i), F.element_at(F.col("words"), i + 1)
+        ),
+    )
+    return d.filter(n >= 2).select("doc_id", F.explode(bigrams).alias(name))
+
+
 @register(
     "repetition_top_bigram",
     oracle="""
@@ -286,19 +303,8 @@ def repetition_top_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (explode of an index transform); the only shuffle is the
     (doc_id, bigram) count — keyed by document, so 100 TB spreads
     evenly and no all-document state ever concentrates."""
-    from firstamerican_etl_spark.plans.dedupplans import exploded_words
-
-    d = exploded_words(load_table(spark, sf_dir, "documents"))
-    n = F.size("words")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(F.col("words"), i), F.element_at(F.col("words"), i + 1)
-        ),
-    )
     counts = (
-        d.filter(n >= 2)
-        .select("doc_id", F.explode(bigrams).alias("bigram"))
+        _doc_bigrams(spark, sf_dir, "bigram")
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -466,6 +472,15 @@ _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _URL_RE = r"https?://[^\s]+"
 
 
+def redact_pii(text: Column) -> Column:
+    """Emails, then URLs, replaced by ``<EMAIL>`` / ``<URL>``: ONE
+    definition, run by text_redact_pii (oracled) and by the corpus
+    build's redaction stage."""
+    return F.regexp_replace(
+        F.regexp_replace(text, _EMAIL_RE, "<EMAIL>"), _URL_RE, "<URL>"
+    )
+
+
 @register(
     "text_redact_pii",
     oracle=f"""
@@ -524,9 +539,7 @@ def text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.regexp_extract_all(emails_gone, F.lit(_URL_RE), 0)).alias(
             "n_urls"
         ),
-        F.md5(
-            F.regexp_replace(emails_gone, _URL_RE, "<URL>").cast("binary")
-        ).alias("redacted_md5"),
+        F.md5(redact_pii(F.col("t")).cast("binary")).alias("redacted_md5"),
     ).orderBy("doc_id")
 
 
@@ -582,19 +595,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine — no join, no window, the same single-exchange
     class as token_count. Docs with <2 words have no bigram evidence
     and are absent, same as DSIR."""
-    from firstamerican_etl_spark.plans.dedupplans import exploded_words
-
-    d = exploded_words(load_table(spark, sf_dir, "documents"))
-    n = F.size("words")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(F.col("words"), i), F.element_at(F.col("words"), i + 1)
-        ),
-    )
-    grams = d.filter(n >= 2).select(
-        "doc_id", F.explode(bigrams).alias("gram")
-    )
+    grams = _doc_bigrams(spark, sf_dir, "gram")
     bucket = F.conv(F.substring(F.md5("gram"), 1, 2), 16, 10).cast("long")
     wgt = (bucket * F.lit(2654435761)) % F.lit(1009) - F.lit(504)
     return grams.select("doc_id", wgt.alias("wgt")).groupBy("doc_id").agg(

@@ -294,9 +294,10 @@ def sample_fixed_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Shared 90/5/5 hash-range split ('e6' = 230/256 ≈ 0.898, 'f3' =
 # 243/256 ≈ 0.051): ONE definition, consumed by train_split_assign,
-# leakage_safe_split_assign, and their oracles — retuning the ratio is
-# a one-site edit and the two queries can never disagree on what
-# "train" means.
+# leakage_safe_split_assign, their oracles and the corpus build
+# (pipeline/corpus_build, full and delta) — retuning the ratio is a
+# one-site edit and the queries and the build can never disagree on
+# what "train" means.
 _SPLIT_TRAIN_HI, _SPLIT_VAL_HI = "e6", "f3"
 
 

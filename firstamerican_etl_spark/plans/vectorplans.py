@@ -152,6 +152,36 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("q_id", "c_id", "cos_sim")
 
 
+def _intra_bucket_top1(e: DataFrame, v: Column, bucket: Column) -> DataFrame:
+    """Top-1 cosine neighbor of each probe (vec_id < 5) among the
+    vectors sharing its ``bucket``: candidates meet only through the
+    bucket equi-join, so cost is Σ bucket² instead of N²."""
+    bucketed = e.select("vec_id", v.alias("vd"), bucket.alias("bucket"))
+    a = bucketed.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("vd").alias("qv"), "bucket"
+    )
+    c = bucketed.select(
+        F.col("vec_id").alias("c_id"), F.col("vd").alias("cv"), "bucket"
+    )
+    sims = (
+        a.join(c, on="bucket")
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select(
+            "q_id",
+            "c_id",
+            "bucket",
+            stable_round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
+        )
+    )
+    return top_k_per_group(
+        sims,
+        partition_by=["q_id"],
+        order_by=[F.col("cos_sim").desc(), F.col("c_id")],
+        k=1,
+        rank_col="__rn",
+    ).select("q_id", "c_id", "bucket", "cos_sim")
+
+
 @register(
     "knn_lsh_bucketed",
     oracle=None,  # random-hyperplane LSH buckets aren't ANSI-SQL-expressible
@@ -184,30 +214,7 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.when(plane_proj(v, p) > 0, F.lit(1 << p)).otherwise(F.lit(0)) for p in range(1, 8)),
         F.when(plane_proj(v, 0) > 0, F.lit(1)).otherwise(F.lit(0)),
     )
-    bucketed = e.select("vec_id", v.alias("vd"), sig.alias("bucket"))
-    a = bucketed.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("vd").alias("qv"), "bucket"
-    )
-    b = bucketed.select(
-        F.col("vec_id").alias("c_id"), F.col("vd").alias("cv"), "bucket"
-    )
-    sims = (
-        a.join(b, on="bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            "bucket",
-            stable_round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
-        )
-    )
-    return top_k_per_group(
-        sims,
-        partition_by=["q_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("c_id")],
-        k=1,
-        rank_col="__rn",
-    ).select("q_id", "c_id", "bucket", "cos_sim")
+    return _intra_bucket_top1(e, v, sig)
 
 
 @register(
@@ -818,15 +825,37 @@ def _lsh_weights(planes: int = 8, dim: int = 64) -> list[list[float]]:
     ]
 
 
-def _lsh_oracle() -> str:
-    ws = _lsh_weights()
+def _lsh_bucket(v: Column) -> Column:
+    """Sign-LSH bucket of the double array ``v`` under the
+    ``_lsh_weights`` hyperplanes: bit p is set when projection p is
+    positive. Projections are sequential left folds (bit-stable
+    addition order), so the bucket equals ``_lsh_bucket_sql``'s."""
+    bucket = None
+    for p, w in enumerate(_lsh_weights()):
+        lit_w = F.array(*[F.lit(x) for x in w])
+        proj = F.aggregate(
+            F.zip_with(v, lit_w, lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        term = F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bucket = term if bucket is None else bucket + term
+    return bucket
+
+
+def _lsh_bucket_sql() -> str:
+    """DuckDB twin of ``_lsh_bucket`` over ``embeddings.embedding``."""
     projs = []
-    for p, w in enumerate(ws):
+    for p, w in enumerate(_lsh_weights()):
         chain = " + ".join(
             f"CAST(embedding[{i + 1}] AS DOUBLE) * {w[i]:.1f}" for i in range(64)
         )
         projs.append(f"CASE WHEN ({chain}) > 0 THEN {1 << p} ELSE 0 END")
-    bucket = " + ".join(projs)
+    return " + ".join(projs)
+
+
+def _lsh_oracle() -> str:
+    bucket = _lsh_bucket_sql()
     return f"""
 WITH b AS (
   SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings
@@ -861,41 +890,7 @@ def knn_lsh_bucketed_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 instead of carrying d×planes literals in the plan."""
     e = load_table(spark, sf_dir, "embeddings")
     v = _as_double(F.col("embedding"))
-    ws = _lsh_weights()
-    bucket = None
-    for p, w in enumerate(ws):
-        lit_w = F.array(*[F.lit(x) for x in w])
-        proj = F.aggregate(
-            F.zip_with(v, lit_w, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        term = F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    bucketed = e.select("vec_id", v.alias("vd"), bucket.alias("bucket"))
-    a = bucketed.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("vd").alias("qv"), "bucket"
-    )
-    c = bucketed.select(
-        F.col("vec_id").alias("c_id"), F.col("vd").alias("cv"), "bucket"
-    )
-    sims = (
-        a.join(c, on="bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            "bucket",
-            stable_round(cosine(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
-        )
-    )
-    return top_k_per_group(
-        sims,
-        partition_by=["q_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("c_id")],
-        k=1,
-        rank_col="__rn",
-    ).select("q_id", "c_id", "bucket", "cos_sim")
+    return _intra_bucket_top1(e, v, _lsh_bucket(v))
 
 
 @register(
@@ -1658,14 +1653,7 @@ _NDCG_IDEAL = sum(g * w for g, w in zip((3, 3, 3, 2, 2, 2, 1, 1, 1, 1), _NDCG_W)
 
 
 def _ndcg_oracle() -> str:
-    ws = _lsh_weights()
-    projs = []
-    for p, w in enumerate(ws):
-        chain = " + ".join(
-            f"CAST(embedding[{i + 1}] AS DOUBLE) * {w[i]:.1f}" for i in range(64)
-        )
-        projs.append(f"CASE WHEN ({chain}) > 0 THEN {1 << p} ELSE 0 END")
-    bucket = " + ".join(projs)
+    bucket = _lsh_bucket_sql()
     w_case = " ".join(
         f"WHEN {i + 1} THEN {w}" for i, w in enumerate(_NDCG_W)
     )
@@ -1766,17 +1754,7 @@ def ndcg_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("long"),
     )
-    ws = _lsh_weights()
-    bucket = None
-    for p, w in enumerate(ws):
-        lit_w = F.array(*[F.lit(x) for x in w])
-        proj = F.aggregate(
-            F.zip_with(v, lit_w, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        term = F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
+    bucket = _lsh_bucket(v)
     nn = F.aggregate(
         F.transform(q, lambda x: x * x), F.lit(0).cast("long"), lambda a, x: a + x
     )

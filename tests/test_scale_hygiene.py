@@ -285,15 +285,23 @@ def _package_functions():
     return out
 
 
-def test_pair_expansion_and_cell_assignment_have_one_copy():
-    """The in-array i<j pair expansion and the nearest-centroid cross
-    join each live in one helper (operators/relational.array_pairs,
-    vectorplans._nearest_cell); a query needing either calls the helper
-    instead of pasting the expression."""
+def test_shared_primitives_and_policies_have_one_copy():
+    """The in-array i<j pair expansion, the nearest-centroid cross join,
+    the PII redaction, the corpus quality gate and the 90/5/5 split
+    compare each live in one helper (operators/relational.array_pairs,
+    vectorplans._nearest_cell, textplans.redact_pii,
+    corpus_build._quality_gate, trainplans.split_col); a query or
+    pipeline needing one calls the helper instead of pasting the
+    expression, so the oracled queries run what the corpus build runs."""
+    import ast
+
     funcs = _package_functions()
     for idiom, home in [
         ("i+2,F.greatest(F.size(", ("operators/relational.py", "array_pairs")),
         ("crossJoin(F.broadcast(cents))", ("plans/vectorplans.py", "_nearest_cell")),
+        ('"<URL>"', ("plans/textplans.py", "redact_pii")),
+        ('w.rlike("^[A-Za-z]+$")', ("pipeline/corpus_build.py", "_quality_gate")),
+        (',"train")', ("plans/trainplans.py", "split_col")),
     ]:
         holders = [(rel, name, seg) for rel, name, seg in funcs if idiom in seg]
         # innermost holders: an enclosing function holds its nested
@@ -304,19 +312,26 @@ def test_pair_expansion_and_cell_assignment_have_one_copy():
             if not any(s2 != seg and s2 in seg for _, _, s2 in holders)
         }
         assert innermost == {home}, (idiom, sorted(innermost))
+    # the split threshold literal itself has one home too
+    assert _holders(lambda n: isinstance(n, ast.Constant) and n.value == "e6") == {
+        ("plans/trainplans.py", "<module>")
+    }
 
 
 def test_ann_index_reads_declare_their_schema():
-    """Every parquet read in pipeline/ann_build.py passes .schema(...):
-    an undeclared read pays a footer-inference job per call."""
+    """Every index read in pipeline/ann_build.py and every ``_index``
+    sidecar read in pipeline/corpus_build.py (fingerprints, bands,
+    scheme) passes .schema(...): an undeclared read pays a
+    footer-inference job per call. Reads of the corpus itself
+    (``out_dir``) and of the CLI's input documents stay undeclared:
+    their columns vary (e.g. ``logweight_scaled``)."""
     import ast
     import os as _os
 
-    path = _os.path.join(
+    pipeline = _os.path.join(
         _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
         "firstamerican_etl_spark",
         "pipeline",
-        "ann_build.py",
     )
 
     def chain(node):
@@ -329,13 +344,19 @@ def test_ann_index_reads_declare_their_schema():
                 node = node.value
         return names
 
-    reads = []
-    for node in ast.walk(ast.parse(open(path).read())):
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "parquet"
-            and "read" in chain(node)
-        ):
-            reads.append((node.lineno, "schema" in chain(node)))
-    assert reads and all(ok for _, ok in reads), [ln for ln, ok in reads if not ok]
+    for module in ("ann_build.py", "corpus_build.py"):
+        reads = []
+        src = open(_os.path.join(pipeline, module)).read()
+        for node in ast.walk(ast.parse(src)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and "read" in chain(node)
+                and ast.unparse(node.args[0]) not in ("out_dir", "a.input_parquet")
+            ):
+                reads.append((node.lineno, "schema" in chain(node)))
+        assert reads and all(ok for _, ok in reads), (
+            module,
+            [ln for ln, ok in reads if not ok],
+        )

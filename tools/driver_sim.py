@@ -322,10 +322,12 @@ def _module_fingerprints(src: str) -> dict[str, str]:
     query's edit in the same module does not. Decorators are part of
     the FunctionDef node, so an oracle-SQL change in @register(...)
     also rolls the fingerprint (an oracle change warrants re-proof as
-    much as a code change). Cross-MODULE helpers are out of scope by
-    design — every r14 cross-module optimization also edited its call
-    sites, and module-wide granularity was measured to flood the
-    45-slot window with unrelated same-file queries."""
+    much as a code change). Cross-MODULE helpers are out of scope:
+    module-wide granularity was measured to flood the 45-slot window
+    with unrelated same-file queries. So a rewrite of code in another
+    module (an operators/ kernel, a plan helper another module
+    imports) moves no caller's fingerprint and schedules no re-proof;
+    re-prove its callers by hand with ``--only``."""
     import ast
     import hashlib
 
